@@ -33,9 +33,18 @@ def _double_sql(x) -> str:
     return repr(v) + "D"
 
 
+def _array_sql(elems, elem_type: str) -> str:
+    """``array(e1, ...)``; an empty list renders as a typed empty literal,
+    since a bare ``array()`` would carry no element type."""
+    elems = list(elems)
+    if not elems:
+        return f"CAST(array() AS ARRAY<{elem_type}>)"
+    return "array(" + ",".join(elems) + ")"
+
+
 def double_array_sql(vals) -> str:
     """``array(1.0D, ...)`` — the SQL text of an array<double> literal."""
-    return "array(" + ",".join(_double_sql(x) for x in vals) + ")"
+    return _array_sql((_double_sql(x) for x in vals), "DOUBLE")
 
 
 def lit_double_array(vals) -> Column:
@@ -51,22 +60,22 @@ def lit_double_matrix(vecs) -> Column:
     """array<array<double>> literal (e.g. a k×dim centroid table) via one
     parsed expression."""
     try:
-        return F.expr(
-            "array(" + ",".join(double_array_sql(v) for v in vecs) + ")")
+        return F.expr(_array_sql(
+            (double_array_sql(v) for v in vecs), "ARRAY<DOUBLE>"))
     except ValueError:
         return F.lit([[float(x) for x in v] for v in vecs])
 
 
 def lit_long_array(vals) -> Column:
     """array<bigint> literal via one parsed expression."""
-    return F.expr(
-        "array(" + ",".join(f"CAST({int(x)} AS BIGINT)" for x in vals) + ")")
+    return F.expr(_array_sql(
+        (f"CAST({int(x)} AS BIGINT)" for x in vals), "BIGINT"))
 
 
 def lit_int_array(vals) -> Column:
     """array<int> literal via one parsed expression."""
-    return F.expr(
-        "array(" + ",".join(f"CAST({int(x)} AS INT)" for x in vals) + ")")
+    return F.expr(_array_sql(
+        (f"CAST({int(x)} AS INT)" for x in vals), "INT"))
 
 
 def lit_index_array(vals) -> Column:

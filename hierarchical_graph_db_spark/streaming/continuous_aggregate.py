@@ -73,7 +73,7 @@ class ContinuousRollupSink:
                 )
             else:
                 merged = partial
-            self.store.commit(batch_id, merged)
+            self.store.commit(batch_id, merged, write_partitions=len(touched))
         finally:
             batch.unpersist()
 

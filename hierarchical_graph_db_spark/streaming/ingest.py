@@ -108,6 +108,10 @@ def _stream_shuffle_partitions(spark: SparkSession):
     ``spark.sql.shuffle.partitions`` before). Restores the session value
     after the stream finishes."""
     n = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    if not (n.isascii() and n.isdigit()) or int(n) < 1:
+        raise ValueError(
+            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive integer, "
+            f"got {n!r}")
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n)
     try:

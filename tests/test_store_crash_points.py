@@ -30,7 +30,8 @@ from hierarchical_graph_db_spark.streaming import store as store_mod
 def _mk_base(spark, path):
     st = store_mod.BucketedParquetStore(spark, path)
     st.commit(0, spark.createDataFrame(
-        [(0, "a"), (1, "b"), (2, "c")], "bucket_id int, val string"))
+        [(0, "a"), (1, "b"), (2, "c")], "bucket_id int, val string"),
+        write_partitions=3)
     return st
 
 
@@ -66,7 +67,7 @@ def test_commit_replays_identically_from_every_replace_crash(
 
     monkeypatch.setattr(store_mod.os, "replace", counting)
     store_mod.BucketedParquetStore(spark, clean).commit(
-        1, _batch1(spark), emptied=[2])
+        1, _batch1(spark), emptied=[2], write_partitions=3)
     monkeypatch.setattr(store_mod.os, "replace", real_replace)
     n_mutations = count["n"]
     # pending swap + 2 dir moves + archive swap + manifest swap
@@ -91,7 +92,7 @@ def test_commit_replays_identically_from_every_replace_crash(
         monkeypatch.setattr(store_mod.os, "replace", crashing)
         with pytest.raises(RuntimeError, match="crash at replace"):
             store_mod.BucketedParquetStore(spark, path).commit(
-                1, _batch1(spark), emptied=[2])
+                1, _batch1(spark), emptied=[2], write_partitions=3)
         monkeypatch.setattr(store_mod.os, "replace", real_replace)
 
         # crashes before the live-manifest swap leave batch 0 fully
@@ -105,7 +106,7 @@ def test_commit_replays_identically_from_every_replace_crash(
         # standard recovery: finish the publish if the WAL is replayable,
         # else redo the whole (idempotent) commit
         if not fresh.already_done(1):
-            fresh.commit(1, _batch1(spark), emptied=[2])
+            fresh.commit(1, _batch1(spark), emptied=[2], write_partitions=3)
         assert _final_state(spark, path) == want, f"crash point {k}"
         # replay of the replay is a no-op skip
         assert fresh.already_done(1)

@@ -278,7 +278,7 @@ def test_store_crash_between_moves_and_swap_is_invisible(spark, tmp_path,
     path = str(tmp_path / "st")
     store = BucketedParquetStore(spark, path)
     store.commit(0, spark.createDataFrame(
-        [(0, "a"), (1, "b")], "bucket_id int, val string"))
+        [(0, "a"), (1, "b")], "bucket_id int, val string"), write_partitions=2)
     v0 = {(r["bucket_id"], r["val"]) for r in store.read().collect()}
     assert v0 == {(0, "a"), (1, "b")}
 
@@ -292,7 +292,8 @@ def test_store_crash_between_moves_and_swap_is_invisible(spark, tmp_path,
     monkeypatch.setattr(BucketedParquetStore, "_write_json", crash_on_swap)
     with pytest.raises(RuntimeError, match="killed"):
         store.commit(1, spark.createDataFrame(
-            [(0, "a2"), (1, "b2")], "bucket_id int, val string"))
+            [(0, "a2"), (1, "b2")], "bucket_id int, val string"),
+                write_partitions=2)
     monkeypatch.setattr(BucketedParquetStore, "_write_json", orig)
 
     # a fresh reader sees batch 0 exactly — never a mix of old and new
@@ -353,7 +354,7 @@ def test_store_read_schema_survives_inference_conf(spark, tmp_path):
 
     store = BucketedParquetStore(spark, str(tmp_path / "st"))
     store.commit(0, spark.createDataFrame(
-        [(0, "a"), (1, "b")], "bucket_id int, val string"))
+        [(0, "a"), (1, "b")], "bucket_id int, val string"), write_partitions=2)
 
     key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     orig = spark.conf.get(key)
@@ -377,7 +378,7 @@ def test_store_read_unseen_buckets_returns_empty(spark, tmp_path):
 
     store = BucketedParquetStore(spark, str(tmp_path / "st"))
     store.commit(0, spark.createDataFrame(
-        [(0, "a")], "bucket_id int, val string"))
+        [(0, "a")], "bucket_id int, val string"), write_partitions=1)
     df = store.read(buckets=[7, 9])
     assert df.count() == 0
     assert df.schema == store.read().schema
@@ -396,7 +397,7 @@ def test_store_vacuum_spares_uncommitted_version_dirs(spark, tmp_path,
     path = str(tmp_path / "st")
     store = BucketedParquetStore(spark, path)
     store.commit(0, spark.createDataFrame(
-        [(0, "a"), (1, "b")], "bucket_id int, val string"))
+        [(0, "a"), (1, "b")], "bucket_id int, val string"), write_partitions=2)
 
     orig = BucketedParquetStore._write_json
 
@@ -408,7 +409,8 @@ def test_store_vacuum_spares_uncommitted_version_dirs(spark, tmp_path,
     monkeypatch.setattr(BucketedParquetStore, "_write_json", crash_on_swap)
     with pytest.raises(RuntimeError, match="killed"):
         store.commit(1, spark.createDataFrame(
-            [(0, "a2"), (1, "b2")], "bucket_id int, val string"))
+            [(0, "a2"), (1, "b2")], "bucket_id int, val string"),
+                write_partitions=2)
     monkeypatch.setattr(BucketedParquetStore, "_write_json", orig)
 
     fresh = BucketedParquetStore(spark, path)
@@ -427,12 +429,12 @@ def test_store_legacy_pending_without_entries_not_replayable(spark, tmp_path):
 
     store = BucketedParquetStore(spark, str(tmp_path / "st"))
     store.commit(0, spark.createDataFrame(
-        [(0, "a")], "bucket_id int, val string"))
+        [(0, "a")], "bucket_id int, val string"), write_partitions=1)
     store._write_json("pending.json", {"batch_id": 1})  # legacy shape
     assert store.already_done(1) is False  # not a KeyError
     # redoing the batch converges normally
     store.commit(1, spark.createDataFrame(
-        [(0, "a2")], "bucket_id int, val string"))
+        [(0, "a2")], "bucket_id int, val string"), write_partitions=1)
     assert {(r["bucket_id"], r["val"]) for r in store.read().collect()} == \
         {(0, "a2")}
 
@@ -618,10 +620,11 @@ def test_store_read_schema_evolution_null_fills(spark, tmp_path):
 
     store = BucketedParquetStore(spark, str(tmp_path / "st"))
     store.commit(0, spark.createDataFrame(
-        [(0, "a"), (1, "b")], "bucket_id int, val string"))
+        [(0, "a"), (1, "b")], "bucket_id int, val string"), write_partitions=2)
     # batch 1 evolves the schema but touches only bucket 1
     store.commit(1, spark.createDataFrame(
-        [(1, "b2", "x")], "bucket_id int, val string, extra string"))
+        [(1, "b2", "x")], "bucket_id int, val string, extra string"),
+            write_partitions=1)
     rows = {(r["bucket_id"], r["val"], r["extra"])
             for r in store.read().collect()}
     assert rows == {(0, "a", None), (1, "b2", "x")}
@@ -643,7 +646,7 @@ def test_store_vacuum_reaps_expired_orphans(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "st")
     store = BucketedParquetStore(spark, path)
     store.commit(0, spark.createDataFrame(
-        [(0, "a"), (1, "b")], "bucket_id int, val string"))
+        [(0, "a"), (1, "b")], "bucket_id int, val string"), write_partitions=2)
 
     orig = BucketedParquetStore._write_json
 
@@ -658,7 +661,8 @@ def test_store_vacuum_reaps_expired_orphans(spark, tmp_path, monkeypatch):
                         crash_before_archive)
     with pytest.raises(RuntimeError, match="killed"):
         store.commit(1, spark.createDataFrame(
-            [(0, "a2"), (1, "b2")], "bucket_id int, val string"))
+            [(0, "a2"), (1, "b2")], "bucket_id int, val string"),
+                write_partitions=2)
     monkeypatch.setattr(BucketedParquetStore, "_write_json", orig)
 
     # the crash's replay state is lost (checkpoint deleted / pending gone)
@@ -742,10 +746,10 @@ def test_store_time_travel_reads_archived_snapshots(spark, tmp_path):
     store = BucketedParquetStore(spark, str(tmp_path / "st"), "b")
     df1 = spark.createDataFrame([(0, "k1", "v1"), (1, "k2", "v1")],
                                 "b: int, k: string, payload: string")
-    store.commit(0, df1)
+    store.commit(0, df1, write_partitions=2)
     df2 = spark.createDataFrame([(0, "k1", "v2")],
                                 "b: int, k: string, payload: string")
-    store.commit(1, df2)
+    store.commit(1, df2, write_partitions=1)
 
     live = {(r["k"], r["payload"]) for r in store.read().collect()}
     assert live == {("k1", "v2"), ("k2", "v1")}
@@ -807,7 +811,7 @@ def test_store_emptied_bucket_crash_between_moves_and_swap(spark, tmp_path,
     path = str(tmp_path / "st")
     store = BucketedParquetStore(spark, path)
     store.commit(0, spark.createDataFrame(
-        [(0, "a"), (1, "b")], "bucket_id int, val string"))
+        [(0, "a"), (1, "b")], "bucket_id int, val string"), write_partitions=2)
 
     orig = BucketedParquetStore._write_json
 
@@ -820,7 +824,8 @@ def test_store_emptied_bucket_crash_between_moves_and_swap(spark, tmp_path,
     with pytest.raises(RuntimeError, match="killed"):
         # bucket 0 rewritten, bucket 1 deleted down to zero rows
         store.commit(1, spark.createDataFrame(
-            [(0, "a2")], "bucket_id int, val string"), emptied=[1])
+            [(0, "a2")], "bucket_id int, val string"), emptied=[1],
+                write_partitions=2)
     monkeypatch.setattr(BucketedParquetStore, "_write_json", orig)
 
     fresh = BucketedParquetStore(spark, path)
@@ -855,3 +860,83 @@ def test_store_emptied_bucket_crash_between_moves_and_swap(spark, tmp_path,
             for r in fresh.read(as_of=0).collect()} == {(0, "a"), (1, "b")}
     # replay of the replay is a no-op skip, not a second publish
     assert fresh.already_done(1)
+
+
+def _group_jobs(sc, group):
+    """Ids of the jobs run under job group ``group``, ascending."""
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_store_fixed_spark_work_per_call(spark, tmp_path):
+    """Host-independent counts of the store's fixed Spark work: a keyed
+    lookup over a store with 64 live buckets is ONE job (no parallel
+    file-listing job in front of the scan), and a sink batch writes one
+    parquet file per touched bucket from at most one task per core."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from hierarchical_graph_db_spark.streaming.store import BucketedParquetStore
+
+    sc = spark.sparkContext
+    store = str(tmp_path / "store")
+    sink = DedupParquetSink(spark, store, key="key",
+                            order_by=["src"], member_cols=["src"])
+    sink(spark.createDataFrame(
+        [Row(key=f"k{i}", payload=f"p{i}", src="a") for i in range(1000)]),
+        batch_id=0)
+    manifest = BucketedParquetStore(spark, store)._manifest()
+    assert len(manifest["buckets"]) == 64
+
+    try:
+        sc.setJobGroup("store-lookup", "keyed lookup")
+        rows = read_dedup_store(spark, store) \
+            .where(F.col("dedupe_key") == "k7").collect()
+        assert [r["payload"] for r in rows] == ["p7"]
+        jobs = _group_jobs(sc, "store-lookup")
+        assert len(jobs) == 1, jobs
+
+        sc.setJobGroup("store-sink", "sink batch")
+        sink(spark.createDataFrame(
+            [Row(key=f"k{i}", payload=f"q{i}", src="b")
+             for i in range(500, 1500)]), batch_id=1)
+        jobs = _group_jobs(sc, "store-sink")
+    finally:
+        sc._jsc.clearJobGroup()
+
+    manifest = BucketedParquetStore(spark, store)._manifest()
+    touched = [e for e, v in manifest["buckets"].items() if v == 1]
+    assert len(touched) == 64
+    for entry in touched:
+        files = glob.glob(os.path.join(store, "data", entry, "__v=1",
+                                       "*.parquet"))
+        assert len(files) == 1, (entry, files)
+    # the commit's write is the sink's last job; its result stage (the
+    # highest stage id of that job) is the stage that writes the files
+    tracker = sc.statusTracker()
+    write_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
+    write_tasks = tracker.getStageInfo(write_stage).numTasks
+    assert write_tasks <= sc.defaultParallelism, write_tasks
+
+
+def test_stream_state_partitions_env_is_validated(spark, monkeypatch):
+    import pytest
+
+    from hierarchical_graph_db_spark.streaming.ingest import (
+        _stream_shuffle_partitions,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    for bad in ("zero", "0", "-2", "1.5", "", "²"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", bad)
+        with pytest.raises(ValueError,
+                           match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
+            with _stream_shuffle_partitions(spark):
+                pass
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
+    with _stream_shuffle_partitions(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
