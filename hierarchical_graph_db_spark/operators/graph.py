@@ -5,29 +5,33 @@ reconstruction, and hierarchy rollups but implements none of them
 (README.md:86-89; placeholders ``parsing_agent.py:62-63``). We implement them
 GraphFrames-style — vertices/edges DataFrames and iterative join algorithms —
 without the GraphFrames JAR dependency (plan B of SURVEY.md §7): connected
-components via alternating min-label propagation, PageRank via out-degree
-joins. Both loop on the driver but every *step* is a distributed join/agg;
-intermediate states are materialized per round to cut lineage
+components via min-label propagation with pointer jumping, PageRank via
+out-degree joins. Both loop on the driver but every *step* is a distributed
+join/agg; intermediate states are materialized per round to cut lineage
 (durable checkpoint() on a cluster, localCheckpoint locally — materialize.py).
 
 Scale posture: edges shuffle on src/dst only; iteration state is one
 (vertex, component|rank) table repartitioned consistently on id so successive
-joins reuse the partitioning. For 100 TB graphs the loop count is bounded
-(CC converges in O(log |V|) rounds with the large-star/small-star trick; we
-use plain propagation here — fine for the reference's mailbox/thread graphs,
-which are shallow).
+joins reuse the partitioning. For 100 TB graphs the loop count is bounded:
+pointer jumping makes the label fixpoints (CC, SCC) converge in
+O(log diameter) rounds.
+
+Two private skeletons carry every operator: :func:`_driver_finish` (the
+hybrid small-graph gate, one bounded pull, one local re-emit) and
+:func:`_fixpoint` (the observe-counted superstep loop that converges or
+raises).
 """
 
 from __future__ import annotations
 
-import math
-import os
-import warnings
-
+import numpy as np
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType, StructType
 
+from hierarchical_graph_db_spark.localdf import collect_tuples, local_rows_df
 from hierarchical_graph_db_spark.materialize import materialize
+from hierarchical_graph_db_spark.operators.clustering import _round6
 
 
 #: Fixed-point scale for order-independent rank-mass sums in the iterative
@@ -86,32 +90,15 @@ def _relative_fp(n: int) -> int:
     return n * q
 
 
-def _resolve_grid(grid: str) -> str:
-    """Resolve the effective grid MODE (before any |V| count is needed):
-    applies the ``SPARK_GRAFT_RANK_GRID`` sweep override and validates the
-    name. Warns when the override differs from what the caller asked for —
-    a lingering env var in a sweep shell otherwise silently flips every
-    rank query's grid with no indication in the output (ADVICE r10)."""
-    resolved = os.environ.get("SPARK_GRAFT_RANK_GRID", grid)
-    if resolved not in ("absolute", "relative", "auto"):
-        raise ValueError(
-            f"grid must be absolute|relative|auto, got {resolved!r}")
-    if resolved != grid:
-        warnings.warn(
-            f"SPARK_GRAFT_RANK_GRID={resolved!r} overrides the requested "
-            f"grid={grid!r} for this rank computation",
-            RuntimeWarning, stacklevel=3)
-    return resolved
-
-
-def _resolve_fp(n: int, grid: str) -> int:
+def _resolve_fp(n: int | None, grid: str) -> int:
     """Pick the fixed-point factor for a run: ``absolute`` = the 1e-15
     grid (the registry/oracle contract), ``relative`` = :func:`_relative_fp`
     (the engine default — no |V| truncation cliff), ``auto`` = absolute
-    within its provably-exact regime (n ≤ 1e7), relative beyond.
-    ``SPARK_GRAFT_RANK_GRID`` overrides for verification sweeps (with a
-    RuntimeWarning when it changes the caller's request)."""
-    grid = _resolve_grid(grid)
+    within its provably-exact regime (n ≤ 1e7), relative beyond. The
+    absolute grid does not depend on ``n``, so callers may pass None."""
+    if grid not in ("absolute", "relative", "auto"):
+        raise ValueError(
+            f"grid must be absolute|relative|auto, got {grid!r}")
     if grid == "absolute":
         return _RANK_FP
     if grid == "relative":
@@ -138,6 +125,82 @@ def _materialize_counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     obs = Observation()
     out = df.observe(obs, F.count(F.lit(1)).alias("n")).transform(materialize)
     return out, obs
+
+
+def _driver_finish(edges: DataFrame, small_cutoff: int, schema: str, kernel,
+                   vertices: DataFrame | None = None,
+                   pull: DataFrame | None = None) -> DataFrame | None:
+    """The hybrid driver finish every graph operator shares (the SCC
+    treatment of Hong, Rodia & Olukotun, PPoPP 2013, applied at the front
+    door). When ``edges`` has at most 32·``small_cutoff`` rows, pull it (or
+    ``pull``, a frame derived from it), plus the ``vertices`` id list when
+    given, run ``kernel(edge_rows[, vertex_ids])`` on the driver and
+    re-emit its rows as a local DataFrame of the DDL ``schema``, whose
+    ``{id}`` placeholder is the vertex id type (of ``vertices``, else of
+    the first ``edges`` column). Returns None when the edge set is over the
+    bound, and always for ``small_cutoff=0``, which forces the caller's
+    distributed path (the 100 TB shape, and what the differential tests
+    exercise). Callers check their own extra preconditions first.
+
+    The probe is LIMIT-bounded: ``limit(bound+1).count()`` short-circuits
+    after the first partitions yield bound+1 rows instead of paying a full
+    count to reject the driver path. Every kernel is exact — a canonical
+    output (component ids, hop counts, integer counts) or a bit-exact
+    replay of the distributed fixed-point arithmetic — so both paths
+    return the identical table."""
+    if not small_cutoff:
+        return None
+    bound = 32 * small_cutoff
+    if edges.limit(bound + 1).count() > bound:
+        return None
+    edge_rows = collect_tuples(edges if pull is None else pull)
+    if vertices is None:
+        rows = kernel(edge_rows)
+    else:
+        rows = kernel(edge_rows, [r[0] for r in vertices.collect()])
+    id_type = (edges if vertices is None else vertices).schema[0].dataType
+    return local_rows_df(
+        edges.sparkSession, rows,
+        StructType.fromDDL(schema.format(id=id_type.simpleString())))
+
+
+def _fixpoint(state: DataFrame, step, changed, max_iter: int, name: str,
+              hint: str) -> DataFrame:
+    """The superstep loop of the fixpoint operators: ``state = step(state)``,
+    materialized every round to cut the lineage, until no row changed.
+    ``step`` returns the next state plus an ``_old`` column holding each
+    row's previous value, and ``changed`` is the Column that flags a row
+    whose value moved. The changed-count is an ``observe`` metric riding
+    the round's own materialization job, so the convergence check costs no
+    extra job. Reaching ``max_iter`` rounds without a fixpoint raises
+    ``RuntimeError`` naming the operator ``name``, followed by ``hint``: a
+    silently partial fixpoint would be a wrong-but-plausible answer."""
+    for _ in range(max_iter):
+        obs = Observation()
+        state = (
+            step(state)
+            .observe(obs, F.coalesce(F.sum(changed.cast("long")),
+                                     F.lit(0)).alias("changed"))
+            .drop("_old")
+        ).transform(materialize)
+        if obs.get["changed"] == 0:
+            return state
+    raise RuntimeError(
+        f"{name} did not converge: no fixpoint within {max_iter} rounds — "
+        f"{hint}")
+
+
+def _quanta(x):
+    """Driver twin of ``round(x).cast("bigint")`` on doubles for the
+    fixed-point sums. Spark's round(double) is HALF_UP over the shortest
+    decimal repr. For non-midpoint doubles that equals nearest-integer (the
+    shortest repr can never cross a representable ``n.5`` midpoint without
+    violating round-trip), and an exact midpoint double rounds up —
+    computed here as ``floor(x) + (x-floor(x) >= 0.5)``, where the
+    subtraction is exact by Sterbenz; integral doubles ≥ 2^53 pass through
+    unchanged exactly as BigDecimal's ``doubleValue`` round-trip does."""
+    fl = np.floor(x)
+    return (fl + ((x - fl) >= 0.5)).astype(np.int64)
 
 
 def communication_edges(emails: DataFrame) -> DataFrame:
@@ -216,21 +279,21 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
                          small_cutoff: int = 16384) -> DataFrame:
     """Min-label propagation + pointer jumping → (id, component).
 
-    ``small_cutoff`` is the hybrid driver finish (the SCC treatment,
-    Hong, Rodia & Olukotun 2013, applied at the front door): when the
-    deduplicated symmetric edge set fits the bound (≤ 32·cutoff edges —
-    vertices are then ≤ 64·cutoff), it is pulled to the driver and
+    ``small_cutoff`` is the hybrid driver finish (:func:`_driver_finish`):
+    when the deduplicated symmetric edge set fits the bound (≤ 32·cutoff
+    edges — vertices are then ≤ 64·cutoff), it is pulled to the driver and
     finished with union-find. The output is CANONICAL (component = min
     member id), so any correct kernel produces the identical table — no
     arithmetic twin needed. This replaces O(log diameter) join+materialize
     rounds with one bounded collect; ``small_cutoff=0`` forces the pure
-    distributed path (the 100 TB shape, and what the differential tests
-    exercise). The default bound (≤ 2^19 edges ≈ tens of MB pulled as
-    Arrow batches) is deliberately wider than SCC's: union-find is
+    distributed path. The default bound (≤ 2^19 edges ≈ tens of MB pulled
+    as Arrow batches) is deliberately wider than SCC's: union-find is
     near-linear with trivial constants, so the driver kernel's crossover
     against O(log diameter) distributed rounds lies far above it.
 
-    Each round of the distributed path does two steps:
+    The distributed path is :func:`_min_reach_labels` over the symmetric
+    edge set: on an undirected graph "the minimum id that reaches v" is the
+    minimum id of v's component. Each round does two steps:
 
     1. *propagate*: component[v] = min over neighbors' components (and own);
     2. *pointer-jump* (path compression): component[v] = component[component[v]]
@@ -240,106 +303,46 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     Plain propagation converges in O(diameter) rounds (a 1M-long chain in a
     100 TB graph = 1M shuffles); with the jump step convergence is
     O(log diameter). Component ids are always *vertex* ids, so the jump join
-    always hits. Stops early when no label changes.
+    always hits. Stops early when no label changes, and raises
+    ``RuntimeError`` if ``max_iter`` rounds do not reach the fixpoint.
     """
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .where(F.col("a") != F.col("b"))
         .distinct()
-    )
-    sym = sym.transform(materialize)
-    if small_cutoff:
-        # LIMIT-bounded regime probe (r14 advice): short-circuits on large
-        # graphs instead of paying a full edge-set count to reject the
-        # driver path; the pull is bounded by the check that precedes it.
-        bound = 32 * small_cutoff
-        if sym.limit(bound + 1).count() <= bound:
-            from pyspark.sql.types import StructField, StructType
-
-            from hierarchical_graph_db_spark.localdf import (
-                collect_tuples, local_rows_df,
-            )
-
-            edge_rows = collect_tuples(sym)
-            id_type = sym.schema.fields[0].dataType
-            schema = StructType([StructField("id", id_type),
-                                 StructField("component", id_type)])
-            return local_rows_df(sym.sparkSession,
-                                 _driver_components(edge_rows), schema)
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
     ).transform(materialize)
-
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels.withColumnRenamed("id", "b"), on="b")
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        propagated = (
-            labels.join(neighbor_min, on="id", how="left")
-            .select(
-                "id",
-                F.col("component").alias("_old"),
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
-        )
-        jump_target = propagated.select(
-            F.col("id").alias("component"), F.col("component").alias("_jumped")
-        )
-        # Convergence check rides the materialization job as an observe()
-        # metric: the old label is threaded through the jump join and the
-        # changed-count accumulates while the round's result is computed —
-        # zero extra jobs per iteration (previously a join + limit(1).count()
-        # job per round, O(log diameter) extra jobs total).
-        obs = Observation()
-        new_labels = (
-            propagated.join(jump_target, on="component", how="left")
-            .select(
-                "id",
-                "_old",
-                F.coalesce("_jumped", F.col("component")).alias("component"),
-            )
-            .observe(obs, F.coalesce(F.sum(
-                (F.col("component") != F.col("_old")).cast("long")
-            ), F.lit(0)).alias("changed"))
-            .select("id", "component")
-        ).transform(materialize)
-        labels = new_labels
-        if obs.get["changed"] == 0:
-            break
-    return labels
+    out = _driver_finish(sym, small_cutoff, "id {id}, component {id}",
+                         _driver_components)
+    if out is not None:
+        return out
+    labels = _min_reach_labels(
+        sym.select(F.col("b").alias("src"), F.col("a").alias("dst")),
+        sym.select(F.col("a").alias("id")).distinct(), max_iter,
+        "connected_components")
+    return labels.withColumnRenamed("label", "component")
 
 
-def _min_reach_labels(edges: DataFrame, vertices: DataFrame,
-                      max_iter: int = 40) -> DataFrame:
+def _min_reach_labels(edges: DataFrame, vertices: DataFrame, max_iter: int,
+                      name: str) -> DataFrame:
     """Directed min-label propagation + pointer jumping → (id, label) where
     ``label`` = the minimum vertex id with a directed path TO ``id``
     (every vertex reaches itself). The invariant "label(v) reaches v" is
     preserved by both steps: an in-neighbor's label reaches the neighbor and
     hence v (edge relax), and label(label(v)) reaches label(v) which reaches
     v (jump) — the jump step is what makes convergence O(log diameter)
-    instead of O(diameter), same as :func:`connected_components` but along
-    edge direction only (no symmetrization). Early-stops via an ``observe``
-    metric riding the per-round materialization, zero extra jobs.
+    instead of O(diameter). Over a symmetric edge set this is
+    :func:`connected_components`.
 
-    Raises ``RuntimeError`` if the fixpoint is not reached within
-    ``max_iter``: :func:`strongly_connected_components` retires vertices
-    (and deletes their edges) based on these labels, so a silently partial
-    fixpoint could retire part of an SCC under a non-min label and split
-    the remainder with no error — the loud failure mirrors the SCC /
-    :func:`dag_layers` non-convergence posture. Unreachable at the default
-    ``max_iter=40`` (pointer jumping covers diameter 2^40), but callers
-    passing small values must get an error, not corrupt output."""
-    labels = vertices.select(F.col("id"), F.col("id").alias("label"))
-    labels = labels.transform(materialize)
-    converged = False
-    for _ in range(max_iter):
+    Raises ``RuntimeError`` naming the caller ``name`` if the fixpoint is
+    not reached within ``max_iter`` (:func:`_fixpoint`):
+    :func:`strongly_connected_components` retires vertices (and deletes
+    their edges) based on these labels, so a silently partial fixpoint
+    could retire part of an SCC under a non-min label and split the
+    remainder with no error. Unreachable at SCC's default ``max_iter=40``
+    (pointer jumping covers diameter 2^40), but callers passing small
+    values must get an error, not corrupt output."""
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(
                 labels.select(F.col("id").alias("src"), "label"), on="src")
@@ -359,31 +362,18 @@ def _min_reach_labels(edges: DataFrame, vertices: DataFrame,
         jump_target = propagated.select(
             F.col("id").alias("label"), F.col("label").alias("_jumped")
         )
-        obs = Observation()
-        new_labels = (
-            propagated.join(jump_target, on="label", how="left")
-            .select(
-                "id",
-                "_old",
-                F.least(
-                    F.col("label"), F.coalesce("_jumped", F.col("label"))
-                ).alias("label"),
-            )
-            .observe(obs, F.coalesce(F.sum(
-                (F.col("label") != F.col("_old")).cast("long")
-            ), F.lit(0)).alias("changed"))
-            .select("id", "label")
-        ).transform(materialize)
-        labels = new_labels
-        if obs.get["changed"] == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"_min_reach_labels did not reach its fixpoint in {max_iter} "
-            f"iterations — raise max_iter (labels were still changing; a "
-            f"partial fixpoint would corrupt SCC retirement)")
-    return labels
+        return propagated.join(jump_target, on="label", how="left").select(
+            "id",
+            "_old",
+            F.least(
+                F.col("label"), F.coalesce("_jumped", F.col("label"))
+            ).alias("label"),
+        )
+
+    labels = vertices.select(F.col("id"), F.col("id").alias("label"))
+    return _fixpoint(labels.transform(materialize), step,
+                     F.col("label") != F.col("_old"), max_iter, name,
+                     "raise max_iter (labels were still changing)")
 
 
 def _tarjan_scc(edge_list: list[tuple], vert_list: list) -> list[tuple]:
@@ -504,30 +494,19 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 100,
     for _ in range(max_rounds):
         if remaining == 0:
             break
-        if small_cutoff and remaining <= small_cutoff:
-            bound = 32 * small_cutoff
-            if active_e.limit(bound + 1).count() <= bound:
-                from pyspark.sql.types import StructField, StructType
-
-                from hierarchical_graph_db_spark.localdf import (
-                    collect_tuples, local_rows_df,
-                )
-
-                edge_rows = collect_tuples(active_e)
-                vert_rows = [r["id"] for r in active_v.collect()]
-                seq = _tarjan_scc(edge_rows, vert_rows)
-                id_type = active_v.schema.fields[0].dataType
-                schema = StructType([StructField("id", id_type),
-                                     StructField("scc", id_type)])
-                parts.append(
-                    local_rows_df(active_v.sparkSession, seq, schema))
+        if remaining <= small_cutoff:
+            out = _driver_finish(active_e, small_cutoff, "id {id}, scc {id}",
+                                 _tarjan_scc, vertices=active_v)
+            if out is not None:
+                parts.append(out)
                 remaining = 0
                 break
-        fwd = _min_reach_labels(active_e, active_v, max_iter=max_iter)
+        fwd = _min_reach_labels(active_e, active_v, max_iter,
+                                "strongly_connected_components")
         bwd = _min_reach_labels(
             active_e.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst")),
-            active_v, max_iter=max_iter)
+            active_v, max_iter, "strongly_connected_components")
         done = (
             fwd.join(bwd.withColumnRenamed("label", "_blabel"), on="id")
             .where(F.col("label") == F.col("_blabel"))
@@ -556,16 +535,44 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 100,
         # No non-self-loop edges: the active set was empty before the first
         # round. Return an empty (id, scc) frame in the input's id dtype
         # rather than IndexError on parts[0].
-        from pyspark.sql.types import StructField, StructType
-
-        id_type = active_v.schema.fields[0].dataType
-        return active_v.sparkSession.createDataFrame(
-            [], StructType([StructField("id", id_type),
-                            StructField("scc", id_type)]))
+        id_type = active_v.schema[0].dataType.simpleString()
+        return local_rows_df(active_v.sparkSession, [], StructType.fromDDL(
+            f"id {id_type}, scc {id_type}"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _driver_dag_layers(edge_rows: list[tuple],
+                       vert_rows: list) -> list[tuple]:
+    """Driver twin of :func:`dag_layers`: Kahn topological order + the
+    longest-path DP, raising on a cycle like the distributed loop."""
+    layer = {v: 0 for v in vert_rows}
+    indeg = {v: 0 for v in vert_rows}
+    succ: dict = {}
+    for s, d in edge_rows:
+        if s == d:
+            raise RuntimeError("dag_layers: self-loop — the input has a cycle")
+        succ.setdefault(s, []).append(d)
+        indeg[d] += 1
+    frontier = sorted(v for v, k in indeg.items() if k == 0)
+    seen = 0
+    while frontier:
+        nxt = []
+        for v in frontier:
+            seen += 1
+            for w in succ.get(v, ()):
+                layer[w] = max(layer[w], layer[v] + 1)
+                indeg[w] -= 1
+                if indeg[w] == 0:
+                    nxt.append(w)
+        frontier = sorted(nxt)
+    if seen != len(vert_rows):
+        raise RuntimeError(
+            "dag_layers did not converge — the input has a cycle; "
+            "longest-path layering is only defined on DAGs")
+    return sorted(layer.items())
 
 
 def dag_layers(edges: DataFrame, max_iter: int = 64,
@@ -592,112 +599,58 @@ def dag_layers(edges: DataFrame, max_iter: int = 64,
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     ).transform(materialize)
-    if small_cutoff:
-        n_verts = verts.count()
-        if n_verts <= small_cutoff:
-            bound = 32 * small_cutoff
-            if edges.limit(bound + 1).count() <= bound:
-                from pyspark.sql.types import (LongType, StructField,
-                                               StructType)
+    if small_cutoff and verts.count() <= small_cutoff:
+        out = _driver_finish(edges, small_cutoff, "id {id}, layer bigint",
+                             _driver_dag_layers, vertices=verts,
+                             pull=edges.select("src", "dst").distinct())
+        if out is not None:
+            return out
 
-                from hierarchical_graph_db_spark.localdf import (
-                    collect_tuples, local_rows_df,
-                )
-
-                edge_rows = collect_tuples(
-                    edges.select("src", "dst").distinct())
-                vert_rows = [r["id"] for r in verts.collect()]
-                layer = {v: 0 for v in vert_rows}
-                indeg = {v: 0 for v in vert_rows}
-                succ: dict = {}
-                for s, d in edge_rows:
-                    if s == d:
-                        raise RuntimeError(
-                            "dag_layers: self-loop — the input has a cycle")
-                    succ.setdefault(s, []).append(d)
-                    indeg[d] += 1
-                frontier = sorted(v for v, k in indeg.items() if k == 0)
-                seen = 0
-                while frontier:
-                    nxt = []
-                    for v in frontier:
-                        seen += 1
-                        for w in succ.get(v, ()):
-                            layer[w] = max(layer[w], layer[v] + 1)
-                            indeg[w] -= 1
-                            if indeg[w] == 0:
-                                nxt.append(w)
-                    frontier = sorted(nxt)
-                if seen != len(vert_rows):
-                    raise RuntimeError(
-                        "dag_layers did not converge — the input has a "
-                        "cycle; longest-path layering is only defined on "
-                        "DAGs")
-                id_type = verts.schema.fields[0].dataType
-                schema = StructType([StructField("id", id_type),
-                                     StructField("layer", LongType())])
-                return local_rows_df(verts.sparkSession,
-                                     sorted(layer.items()), schema)
-    layers = verts.withColumn("layer", F.lit(0).cast("long"))
-    for _ in range(max_iter):
+    def step(layers: DataFrame) -> DataFrame:
         relaxed = (
             edges.join(layers.select(F.col("id").alias("src"), "layer"),
                        on="src")
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("layer") + 1).alias("pred_layer"))
         )
-        obs = Observation()
-        new_layers = (
-            layers.join(relaxed, on="id", how="left")
-            .select(
-                "id",
-                F.col("layer").alias("_old"),
-                F.greatest(
-                    F.col("layer"),
-                    F.coalesce("pred_layer", F.col("layer")),
-                ).alias("layer"),
-            )
-            .observe(obs, F.coalesce(F.sum(
-                (F.col("layer") != F.col("_old")).cast("long")
-            ), F.lit(0)).alias("changed"))
-            .select("id", "layer")
-        ).transform(materialize)
-        layers = new_layers
-        if obs.get["changed"] == 0:
-            return layers
-    raise RuntimeError(
-        f"dag_layers did not converge in {max_iter} rounds — the input has "
-        f"a cycle (or a longest path deeper than max_iter); longest-path "
-        f"layering is only defined on DAGs")
+        return layers.join(relaxed, on="id", how="left").select(
+            "id",
+            F.col("layer").alias("_old"),
+            F.greatest(
+                F.col("layer"), F.coalesce("pred_layer", F.col("layer")),
+            ).alias("layer"),
+        )
+
+    return _fixpoint(
+        verts.withColumn("layer", F.lit(0).cast("long")), step,
+        F.col("layer") != F.col("_old"), max_iter, "dag_layers",
+        "the input has a cycle (or a longest path deeper than max_iter); "
+        "longest-path layering is only defined on DAGs")
 
 
-def _driver_pagerank(vert_rows: list, edge_rows: list[tuple], n_iter: int,
-                     damping: float, fp: int) -> list[tuple]:
-    """Bit-exact driver twin of the distributed PageRank loop, for the
-    hybrid small-graph finish. Every arithmetic step mirrors the Spark
-    expressions ON THE SAME IEEE-754 doubles in the same order:
+def _driver_rank(vert_rows: list, edge_rows: list[tuple], rank: np.ndarray,
+                 teleport, n_iter: int, damping: float,
+                 fp: int) -> list[tuple]:
+    """Bit-exact driver twin of :func:`_rank_supersteps`, the hybrid
+    small-graph finish of :func:`pagerank` and
+    :func:`personalized_pagerank`. ``rank`` is the initial vector over
+    ``vert_rows`` and ``teleport(dangling)`` the operator's teleport term.
+    Every arithmetic step mirrors the Spark expressions ON THE SAME
+    IEEE-754 doubles in the same order:
 
     * ``contrib = rank/out_degree`` — one double divide per edge row
       (``deg`` converted long→double exactly, as Spark's implicit cast);
-    * ``_fp_sum``'s ``round(x·fp)`` — Spark's round(double) is HALF_UP over
-      the shortest decimal repr. For non-midpoint doubles that equals
-      nearest-integer (the shortest repr can never cross a representable
-      ``n.5`` midpoint without violating round-trip), and an exact
-      midpoint double rounds up — computed here as ``floor(x) + (x-floor(x)
-      >= 0.5)``, where the subtraction is exact by Sterbenz; integral
-      doubles ≥ 2^53 pass through unchanged exactly as BigDecimal's
-      ``doubleValue`` round-trip does;
+    * ``_fp_sum``'s ``round(x·fp)`` — :func:`_quanta`;
     * quanta sums in int64 (commutative, so grouping order is free — the
       same argument that makes the distributed sum partition-independent);
-    * the update ``(base + (d·dangling)/n) + d·in_rank`` with the exact
-      literal/operator associativity of the Spark plan.
+    * the update ``teleport(dangling) + d·in_rank`` with the exact
+      literal/operator associativity of the Spark plan, which the caller's
+      ``teleport`` reproduces.
 
     numpy elementwise ops are scalar IEEE ops in a loop — no FMA, no
     reassociation — so each output double is bit-identical to the
     distributed path's.
     """
-    import numpy as np
-
     n = len(vert_rows)
     idx = {v: i for i, v in enumerate(vert_rows)}
     src_i = np.fromiter((idx[s] for s, _ in edge_rows), dtype=np.int64,
@@ -708,24 +661,65 @@ def _driver_pagerank(vert_rows: list, edge_rows: list[tuple], n_iter: int,
     deg_f = deg.astype(np.float64)
     no_out = deg == 0
     fpf = float(fp)
-    base = (1.0 - damping) / n
-    fn = float(n)
-    rank = np.full(n, 1.0 / n, dtype=np.float64)
-
-    def quanta(x: np.ndarray) -> np.ndarray:
-        fl = np.floor(x)
-        return (fl + ((x - fl) >= 0.5)).astype(np.int64)
-
     for _ in range(n_iter):
         contrib = rank[src_i] / deg_f[src_i]
-        q = quanta(contrib * fpf)
+        q = _quanta(contrib * fpf)
         acc = np.zeros(n, dtype=np.int64)
         np.add.at(acc, dst_i, q)
-        dang = int(quanta(rank[no_out] * fpf).sum()) if no_out.any() else 0
+        dang = int(_quanta(rank[no_out] * fpf).sum()) if no_out.any() else 0
         dangling = dang / fpf
         in_rank = acc / fpf
-        rank = (base + (damping * dangling) / fn) + damping * in_rank
+        rank = teleport(dangling) + damping * in_rank
     return [(v, float(rank[i])) for v, i in idx.items()]
+
+
+def _rank_supersteps(edges: DataFrame, frame: DataFrame, ranks: DataFrame,
+                     teleport, n_iter: int, damping: float,
+                     fp: int) -> DataFrame:
+    """The distributed superstep body of :func:`pagerank` and
+    :func:`personalized_pagerank`: ``n_iter`` rounds of
+    ``rank = teleport + d·Σ rank(in)/out_degree(in)`` from the initial
+    (id, rank) ``ranks``. ``frame`` carries every vertex id plus any
+    column ``teleport`` reads besides ``dangling`` (the dangling rank mass
+    of the round). Both aggregates are fixed-point sums (``_fp_sum``)."""
+    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).alias("out_degree")
+    ).transform(materialize)
+    # Pre-join edges with out-degree ONCE (degree is iteration-invariant);
+    # each iteration then joins only (src → rank), not two joins.
+    edges_deg = (
+        edges.join(out_deg.withColumnRenamed("id", "src"), on="src")
+        .select("src", "dst", "out_degree")
+    ).transform(materialize)
+    for _ in range(n_iter):
+        contrib = (
+            edges_deg.join(ranks.withColumnRenamed("id", "src"), on="src")
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("rank") / F.col("out_degree")).alias("contrib"),
+            )
+            .groupBy("id")
+            .agg(_fp_sum(F.col("contrib"), fp).alias("in_rank"))
+        )
+        # Dangling mass as a broadcast 1-row aggregate INSIDE the plan — no
+        # driver collect per iteration (one extra job each round at scale).
+        dangling = (
+            ranks.join(out_deg, on="id", how="left_anti")
+            .agg(F.coalesce(_fp_sum(F.col("rank"), fp),
+                            F.lit(0.0)).alias("dangling"))
+        )
+        ranks = (
+            frame.join(contrib, on="id", how="left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "id",
+                (
+                    teleport
+                    + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))
+                ).alias("rank"),
+            )
+        ).transform(materialize)
+    return ranks
 
 
 def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
@@ -762,89 +756,34 @@ def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
     ).transform(materialize)
     n = vertices.count()
     fp = _resolve_fp(n, grid)
-    if small_cutoff and 0 < n <= small_cutoff:
-        # Hybrid driver finish (the SCC treatment): a graph this small is
-        # all per-round job overhead on the distributed path — pull the
-        # bounded edge list and replay the EXACT fixed-point arithmetic in
-        # one driver kernel (:func:`_driver_pagerank`; bit-identity is the
-        # same argument as the distributed path's partition-independence).
-        # ``small_cutoff=0`` forces the distributed path — the 100 TB
-        # shape, and what the differential tests exercise. The edge probe
-        # is LIMIT-bounded (r14 advice): a small vertex set can still hang
-        # off a huge multi-edge list, and the probe should short-circuit
-        # rather than count it all just to reject the driver path.
-        bound = 32 * small_cutoff
-        if edges.limit(bound + 1).count() <= bound:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            from hierarchical_graph_db_spark.localdf import (
-                collect_tuples, local_rows_df,
-            )
-
-            edge_rows = collect_tuples(edges.select("src", "dst"))
-            vert_rows = [r["id"] for r in vertices.collect()]
-            rows = _driver_pagerank(vert_rows, edge_rows, n_iter, damping,
-                                    fp)
-            id_type = vertices.schema.fields[0].dataType
-            schema = StructType([StructField("id", id_type),
-                                 StructField("rank", DoubleType())])
-            return local_rows_df(vertices.sparkSession, rows, schema)
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    ).transform(materialize)
-    # Pre-join edges with out-degree ONCE (degree is iteration-invariant);
-    # each iteration then joins only (src → rank), not two joins.
-    edges_deg = (
-        edges.join(out_deg.withColumnRenamed("id", "src"), on="src")
-        .select("src", "dst", "out_degree")
-    ).transform(materialize)
-    ranks = vertices.withColumn("rank", F.lit(1.0 / n))
-
-    for _ in range(n_iter):
-        contrib = (
-            edges_deg.join(ranks.withColumnRenamed("id", "src"), on="src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(_fp_sum(F.col("contrib"), fp).alias("in_rank"))
-        )
-        # Dangling mass as a broadcast 1-row aggregate INSIDE the plan — no
-        # driver collect per iteration (one extra job each round at scale).
-        dangling = (
-            ranks.join(out_deg, on="id", how="left_anti")
-            .agg(F.coalesce(_fp_sum(F.col("rank"), fp),
-                            F.lit(0.0)).alias("dangling"))
-        )
-        ranks = (
-            vertices.join(contrib, on="id", how="left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("dangling") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))
-                ).alias("rank"),
-            )
-        ).transform(materialize)
-    return ranks
+    base = (1.0 - damping) / n
+    if n <= small_cutoff:
+        # A graph this small is all per-round job overhead on the
+        # distributed path; the gate still bounds the edge count, since a
+        # small vertex set can hang off a huge multi-edge list.
+        out = _driver_finish(
+            edges.select("src", "dst"), small_cutoff, "id {id}, rank double",
+            lambda e, v: _driver_rank(
+                v, e, np.full(n, 1.0 / n),
+                lambda dangling: base + (damping * dangling) / float(n),
+                n_iter, damping, fp),
+            vertices=vertices)
+        if out is not None:
+            return out
+    return _rank_supersteps(
+        edges, vertices, vertices.withColumn("rank", F.lit(1.0 / n)),
+        F.lit(base) + F.lit(damping) * F.col("dangling") / F.lit(float(n)),
+        n_iter, damping, fp)
 
 
 def _driver_hits(vert_rows: list, edge_rows: list[tuple],
                  n_iter: int) -> list[tuple]:
     """Bit-exact driver twin of the :func:`hits` loop (hybrid small-graph
     finish): per half-step, int64 sums of ``round(state·1e6)`` quanta over
-    the multi-edge list (the same HALF_UP-nearest trick as
-    :func:`_driver_pagerank` — state is in [0, 1] so quanta stay ≤ 1e6),
-    exact double max-norm, and the 6dp output quantization through the
-    ``_round6`` HALF_UP/shortest-repr twin, one call per vertex per
-    half-step."""
-    import numpy as np
-
-    from hierarchical_graph_db_spark.operators.clustering import _round6
-
+    the multi-edge list (:func:`_quanta` — state is in [0, 1] so quanta
+    stay ≤ 1e6), exact double max-norm, and the 6dp output quantization
+    through the ``_round6`` HALF_UP/shortest-repr twin, one call per
+    vertex per half-step."""
     n = len(vert_rows)
     idx = {v: i for i, v in enumerate(vert_rows)}
     src_i = np.fromiter((idx[s] for s, _ in edge_rows), dtype=np.int64,
@@ -852,14 +791,10 @@ def _driver_hits(vert_rows: list, edge_rows: list[tuple],
     dst_i = np.fromiter((idx[t] for _, t in edge_rows), dtype=np.int64,
                         count=len(edge_rows))
 
-    def quanta(x: np.ndarray) -> np.ndarray:
-        fl = np.floor(x)
-        return (fl + ((x - fl) >= 0.5)).astype(np.int64)
-
     def half_step(state: np.ndarray, from_i: np.ndarray,
                   to_i: np.ndarray) -> np.ndarray:
         acc = np.zeros(n, dtype=np.int64)
-        np.add.at(acc, to_i, quanta(state[from_i] * 1000000.0))
+        np.add.at(acc, to_i, _quanta(state[from_i] * 1000000.0))
         has = np.zeros(n, dtype=bool)
         has[to_i] = True
         s = acc / 1000000.0
@@ -920,24 +855,12 @@ def hits(edges: DataFrame, n_iter: int = 8,
         .distinct()
     ).transform(materialize)
     if small_cutoff and 0 < vertices.count() <= small_cutoff:
-        # Hybrid driver finish — see :func:`pagerank`. ``small_cutoff=0``
-        # forces the distributed path (the 100 TB shape).
-        bound = 32 * small_cutoff
-        if edges.limit(bound + 1).count() <= bound:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            from hierarchical_graph_db_spark.localdf import (
-                collect_tuples, local_rows_df,
-            )
-
-            edge_rows = collect_tuples(edges.select("src", "dst"))
-            vert_rows = [r["id"] for r in vertices.collect()]
-            rows = _driver_hits(vert_rows, edge_rows, n_iter)
-            id_type = vertices.schema.fields[0].dataType
-            schema = StructType([StructField("id", id_type),
-                                 StructField("hub", DoubleType()),
-                                 StructField("auth", DoubleType())])
-            return local_rows_df(vertices.sparkSession, rows, schema)
+        out = _driver_finish(
+            edges.select("src", "dst"), small_cutoff,
+            "id {id}, hub double, auth double",
+            lambda e, v: _driver_hits(v, e, n_iter), vertices=vertices)
+        if out is not None:
+            return out
     hubs = vertices.withColumn("hub", F.lit(1.0))
     auths = None
     for _ in range(n_iter):
@@ -1007,27 +930,6 @@ def thread_ids(emails: DataFrame, max_iter: int = 20) -> DataFrame:
     )
 
 
-def _collect_small_graph(e: DataFrame, small_cutoff: int):
-    """Shared hybrid-finish gate over a MATERIALIZED canonical edge frame:
-    returns the pulled edge list when it fits ≤ 32·cutoff rows, else None
-    (caller proceeds distributed).
-
-    The regime probe is a LIMIT-bounded count (round 15, r14 advice): a
-    full ``count()`` paid one whole-edge-set pass per operator call purely
-    to REJECT the driver path at the 100 TB shape, where
-    ``limit(bound+1).count()`` short-circuits after the first partitions
-    yield bound+1 rows. On the accept path the subsequent pull is the same
-    full ``collect_tuples(e)`` as before — row set and order unchanged."""
-    if not small_cutoff:
-        return None
-    bound = 32 * small_cutoff
-    if e.limit(bound + 1).count() > bound:
-        return None
-    from hierarchical_graph_db_spark.localdf import collect_tuples
-
-    return collect_tuples(e)
-
-
 def _bfs_driver(edge_rows: list[tuple], seeds: list, max_hops: int) -> dict:
     """Level-synchronous BFS over an adjacency dict — the driver twin of the
     iterative frontier joins. Hop distances are canonical (unique), so any
@@ -1058,7 +960,8 @@ def _bfs_driver(edge_rows: list[tuple], seeds: list, max_hops: int) -> dict:
 
 def shortest_paths(edges: DataFrame, landmark: str, max_hops: int = 10,
                    directed: bool = False, small_cutoff: int = 4096) -> DataFrame:
-    """Unweighted shortest-path distance from ``landmark`` → (id, distance).
+    """Unweighted shortest-path distance from ``landmark`` → (id, distance):
+    :func:`multi_source_distances` from the one seed.
 
     Level-synchronous BFS as iterative joins: frontier ⋈ edges → next
     frontier minus visited. Each round is one shuffle join on the vertex id;
@@ -1066,47 +969,9 @@ def shortest_paths(edges: DataFrame, landmark: str, max_hops: int = 10,
     are absent from the result (join-semantics, same as the recursive-CTE
     oracle).
     """
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.union(edges.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst")))
-    e = e.where(F.col("src") != F.col("dst")).distinct().transform(materialize)
-    from pyspark.sql.types import StringType, StructType
-
-    if isinstance(e.schema["src"].dataType, StringType):
-        edge_rows = _collect_small_graph(e, small_cutoff)
-        if edge_rows is not None:
-            # Hybrid driver finish (canonical hop distances — the CC
-            # argument); small_cutoff=0 forces the distributed path. The
-            # string-dtype gate keeps the driver path off exotic caller
-            # dtypes so the emitted schema always matches the distributed
-            # one (the seed frame pins id to string).
-            from hierarchical_graph_db_spark.localdf import local_rows_df
-
-            dist = _bfs_driver(edge_rows, [landmark], max_hops)
-            return local_rows_df(
-                e.sparkSession,
-                [(v, d) for (_, v), d in dist.items()],
-                StructType.fromDDL("id string, distance int"))
-
-    visited = e.sparkSession.createDataFrame(
-        [(landmark, 0)], "id string, distance int"
-    ).transform(materialize)
-    frontier = visited
-
-    for hop in range(1, max_hops + 1):
-        nxt, n_obs = _materialize_counted(
-            frontier.join(e, frontier.id == e.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, on="id", how="left_anti")
-            .withColumn("distance", F.lit(hop))
-        )
-        if n_obs.get["n"] == 0:
-            break
-        visited = visited.unionByName(nxt).transform(materialize)
-        frontier = nxt
-    return visited
+    return multi_source_distances(
+        edges, [landmark], max_hops=max_hops, directed=directed,
+        small_cutoff=small_cutoff).select("id", "distance")
 
 
 def triangle_count(edges: DataFrame, small_cutoff: int = 4096) -> DataFrame:
@@ -1127,20 +992,15 @@ def triangle_count(edges: DataFrame, small_cutoff: int = 4096) -> DataFrame:
         .distinct()
         .transform(materialize)
     )
-    edge_rows = _collect_small_graph(e, small_cutoff)
-    if edge_rows is not None:
-        # Hybrid driver finish: both outputs are integer counts
-        # (algorithm-free); reuse the per-vertex triangle kernel's
-        # adjacency-intersection walk. small_cutoff=0 forces the joins.
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from hierarchical_graph_db_spark.localdf import local_rows_df
-
-        tri3 = sum(t for _, _, t, _ in _driver_local_clustering(edge_rows))
-        schema = StructType([StructField("n_edges", LongType(), False),
-                             StructField("n_triangles", LongType(), False)])
-        return local_rows_df(e.sparkSession,
-                             [(len(edge_rows), tri3 // 3)], schema)
+    # Hybrid driver finish: both outputs are integer counts
+    # (algorithm-free); reuse the per-vertex triangle kernel's
+    # adjacency-intersection walk.
+    out = _driver_finish(
+        e, small_cutoff, "n_edges bigint not null, n_triangles bigint not null",
+        lambda rows: [(len(rows), sum(
+            t for _, _, t, _ in _driver_local_clustering(rows)) // 3)])
+    if out is not None:
+        return out
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.b") == F.col("e2.a"))
@@ -1200,45 +1060,34 @@ def weighted_distances(edges: DataFrame, landmark: str,
     is inherently sequential; relaxation rounds are how SSSP scales out).
     The convergence probe is an ``observe()`` metric riding the round's own
     materialization job (the old distance travels through the min-aggregate
-    as a tagged min — zero extra jobs), the same loop-control pattern as
-    :func:`connected_components`; the per-round materialization keeps the
+    as a tagged min — zero extra jobs), the loop every fixpoint operator
+    shares (:func:`_fixpoint`); the per-round materialization keeps the
     lineage flat. Unreachable vertices are absent (same as the unrolled SQL
     oracle).
     """
     e = edges.select("src", "dst", F.col(weight_col).cast("double").alias("cost"))
     e = e.transform(materialize)
-    from pyspark.sql.types import StringType, StructType
-
     if isinstance(e.schema["src"].dataType, StringType):
-        edge_rows = _collect_small_graph(e, small_cutoff)
-        if edge_rows is not None:
-            # Hybrid driver finish: the SAME synchronous relaxation from
-            # the same init is replayed verbatim (identical update
-            # function → identical fixed point, doubles included) —
-            # see _driver_bellman_ford. small_cutoff=0 forces the
-            # distributed loop.
-            from hierarchical_graph_db_spark.localdf import local_rows_df
+        # Hybrid driver finish: the SAME synchronous relaxation from the
+        # same init is replayed verbatim (identical update function →
+        # identical fixed point, doubles included) — see
+        # _driver_bellman_ford.
+        out = _driver_finish(
+            e, small_cutoff, "id string, distance double",
+            lambda rows: list(
+                _driver_bellman_ford(rows, landmark, max_rounds).items()))
+        if out is not None:
+            return out
 
-            dist = _driver_bellman_ford(edge_rows, landmark, max_rounds)
-            return local_rows_df(
-                e.sparkSession, list(dist.items()),
-                StructType.fromDDL("id string, distance double"))
-    dist = e.sparkSession.createDataFrame(
-        [(landmark, 0.0)], "id string, distance double"
-    ).transform(materialize)
-
-    for _ in range(max_rounds):
+    def step(dist: DataFrame) -> DataFrame:
         relaxed = (
             dist.join(e, dist.id == e.src)
             .select(F.col("dst").alias("id"),
                     (F.col("distance") + F.col("cost")).alias("distance"))
         )
         # The old distance rides the same aggregate as a tagged min, so the
-        # improved-count is an observe() metric on the materialization job —
-        # the per-round comparison join is gone (same trick as
-        # connected_components' convergence check).
-        obs = Observation()
-        new_dist = (
+        # improved-count needs no per-round comparison join.
+        return (
             dist.withColumn("_src", F.lit(1))
             .unionByName(relaxed.withColumn("_src", F.lit(0)))
             .groupBy("id")
@@ -1247,19 +1096,17 @@ def weighted_distances(edges: DataFrame, landmark: str,
                 F.min(F.when(F.col("_src") == 1, F.col("distance")))
                 .alias("_old"),
             )
-            .observe(obs, F.coalesce(F.sum(
-                (F.col("_old").isNull()
-                 | (F.col("distance") < F.col("_old"))).cast("long")
-            ), F.lit(0)).alias("improved"))
-            .select("id", "distance")
-        ).transform(materialize)
-        dist = new_dist
-        if obs.get["improved"] == 0:
-            return dist
-    raise RuntimeError(
-        f"weighted_distances did not converge within max_rounds={max_rounds}; "
-        f"the graph's weighted diameter exceeds the safety cap — raise it"
-    )
+        )
+
+    dist = e.sparkSession.createDataFrame(
+        [(landmark, 0.0)], "id string, distance double"
+    ).transform(materialize)
+    return _fixpoint(
+        dist, step,
+        F.col("_old").isNull() | (F.col("distance") < F.col("_old")),
+        max_rounds, "weighted_distances",
+        "the graph's weighted diameter exceeds the max_rounds safety cap; "
+        "raise it")
 
 
 def _driver_lpa(edge_rows: list[tuple], n_iter: int) -> list[tuple]:
@@ -1300,20 +1147,12 @@ def label_propagation_communities(edges: DataFrame, n_iter: int = 5,
         .where(F.col("a") != F.col("b"))
         .distinct()
     ).transform(materialize)
-    edge_rows = _collect_small_graph(sym, small_cutoff)
-    if edge_rows is not None:
-        # Hybrid driver finish: the synchronized rounds + deterministic
-        # tie-break replay exactly in plain counting (no FP); cutoff=0
-        # forces the distributed path.
-        from pyspark.sql.types import StructField, StructType
-
-        from hierarchical_graph_db_spark.localdf import local_rows_df
-
-        id_type = sym.schema.fields[0].dataType
-        schema = StructType([StructField("id", id_type),
-                             StructField("community", id_type)])
-        return local_rows_df(sym.sparkSession,
-                             _driver_lpa(edge_rows, n_iter), schema)
+    # Hybrid driver finish: the synchronized rounds + deterministic
+    # tie-break replay exactly in plain counting (no FP).
+    out = _driver_finish(sym, small_cutoff, "id {id}, community {id}",
+                         lambda rows: _driver_lpa(rows, n_iter))
+    if out is not None:
+        return out
     labels = (
         sym.select(F.col("a").alias("id")).distinct()
         .withColumn("community", F.col("id"))
@@ -1376,48 +1215,6 @@ def sequential_interaction_edges(events: DataFrame) -> DataFrame:
     )
 
 
-def _driver_personalized_pagerank(vert_rows: list, edge_rows: list[tuple],
-                                  src_set: set, n_iter: int, damping: float,
-                                  fp: int) -> list[tuple]:
-    """Bit-exact driver twin of the :func:`personalized_pagerank` loop —
-    :func:`_driver_pagerank` with the uniform 1/N terms replaced by the
-    per-vertex ``reset`` column, operator order preserved:
-    ``((1-d)·reset + (d·dangling)·reset) + d·in_rank``."""
-    import numpy as np
-
-    n = len(vert_rows)
-    idx = {v: i for i, v in enumerate(vert_rows)}
-    src_i = np.fromiter((idx[s] for s, _ in edge_rows), dtype=np.int64,
-                        count=len(edge_rows))
-    dst_i = np.fromiter((idx[t] for _, t in edge_rows), dtype=np.int64,
-                        count=len(edge_rows))
-    deg = np.bincount(src_i, minlength=n)
-    deg_f = deg.astype(np.float64)
-    no_out = deg == 0
-    fpf = float(fp)
-    n_s = len(src_set)
-    reset = np.fromiter(
-        ((1.0 / n_s) if v in src_set else 0.0 for v in vert_rows),
-        dtype=np.float64, count=n)
-    rank = reset.copy()
-
-    def quanta(x: np.ndarray) -> np.ndarray:
-        fl = np.floor(x)
-        return (fl + ((x - fl) >= 0.5)).astype(np.int64)
-
-    for _ in range(n_iter):
-        contrib = rank[src_i] / deg_f[src_i]
-        q = quanta(contrib * fpf)
-        acc = np.zeros(n, dtype=np.int64)
-        np.add.at(acc, dst_i, q)
-        dang = int(quanta(rank[no_out] * fpf).sum()) if no_out.any() else 0
-        dangling = dang / fpf
-        in_rank = acc / fpf
-        rank = ((1.0 - damping) * reset
-                + (damping * dangling) * reset) + damping * in_rank
-    return [(v, float(rank[i])) for v, i in idx.items()]
-
-
 def personalized_pagerank(edges: DataFrame, sources: DataFrame,
                           n_iter: int = 10,
                           damping: float = 0.85,
@@ -1440,81 +1237,44 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     ).transform(materialize)
-    # Resolve the grid MODE first and count vertices only when the count
-    # is actually consumed — by the relative-grid factor, or by the hybrid
-    # driver-finish gate (grid="absolute" with small_cutoff=0 previously
-    # paid a vertices.count() job whose result was unused, ADVICE r10).
-    mode = _resolve_grid(grid)
-    n_v = (vertices.count()
-           if (small_cutoff or mode != "absolute") else None)
-    fp = _RANK_FP if mode == "absolute" else _resolve_fp(n_v, mode)
+    # Count vertices only when the count is consumed — by the relative-grid
+    # factor or by the driver-finish gate.
+    n_v = (vertices.count() if small_cutoff or grid != "absolute" else None)
+    fp = _resolve_fp(n_v, grid)
     src_ids = vertices.join(sources.select("id").distinct(), on="id",
                             how="left_semi").transform(materialize)
     n_s = src_ids.count()
     if n_s == 0:
         raise ValueError("no source vertex appears in the edge set")
     if small_cutoff and 0 < n_v <= small_cutoff:
-        # Hybrid driver finish — see :func:`pagerank`. The source-set pull
-        # is bounded by the vertex cutoff (src_ids ⊆ vertices).
-        bound = 32 * small_cutoff
-        if edges.limit(bound + 1).count() <= bound:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            from hierarchical_graph_db_spark.localdf import (
-                collect_tuples, local_rows_df,
-            )
-
-            edge_rows = collect_tuples(edges.select("src", "dst"))
-            vert_rows = [r["id"] for r in vertices.collect()]
+        # The source-set pull is bounded by the vertex cutoff
+        # (src_ids ⊆ vertices).
+        def kernel(edge_rows: list[tuple], vert_rows: list) -> list[tuple]:
             src_set = {r["id"] for r in src_ids.collect()}
-            rows = _driver_personalized_pagerank(
-                vert_rows, edge_rows, src_set, n_iter, damping, fp)
-            id_type = vertices.schema.fields[0].dataType
-            schema = StructType([StructField("id", id_type),
-                                 StructField("rank", DoubleType())])
-            return local_rows_df(vertices.sparkSession, rows, schema)
+            reset = np.fromiter(
+                ((1.0 / n_s) if v in src_set else 0.0 for v in vert_rows),
+                dtype=np.float64, count=len(vert_rows))
+            return _driver_rank(
+                vert_rows, edge_rows, reset,
+                lambda dangling: ((1.0 - damping) * reset
+                                  + (damping * dangling) * reset),
+                n_iter, damping, fp)
+
+        out = _driver_finish(edges.select("src", "dst"), small_cutoff,
+                             "id {id}, rank double", kernel,
+                             vertices=vertices)
+        if out is not None:
+            return out
     base = (
         vertices.join(src_ids.withColumn("reset", F.lit(1.0 / n_s)),
                       on="id", how="left")
         .select("id", F.coalesce("reset", F.lit(0.0)).alias("reset"))
     ).transform(materialize)
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    ).transform(materialize)
-    edges_deg = (
-        edges.join(out_deg.withColumnRenamed("id", "src"), on="src")
-        .select("src", "dst", "out_degree")
-    ).transform(materialize)
-    ranks = base.select("id", F.col("reset").alias("rank"))
-
-    for _ in range(n_iter):
-        contrib = (
-            edges_deg.join(ranks.withColumnRenamed("id", "src"), on="src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(_fp_sum(F.col("contrib"), fp).alias("in_rank"))
-        )
-        dangling = (
-            ranks.join(out_deg, on="id", how="left_anti")
-            .agg(F.coalesce(_fp_sum(F.col("rank"), fp),
-                            F.lit(0.0)).alias("dangling"))
-        )
-        ranks = (
-            base.join(contrib, on="id", how="left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * F.col("reset")
-                    + F.lit(damping) * F.col("dangling") * F.col("reset")
-                    + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))
-                ).alias("rank"),
-            )
-        ).transform(materialize)
-    return ranks
+    return _rank_supersteps(
+        edges, base, base.select("id", F.col("reset").alias("rank")),
+        F.lit(1.0 - damping) * F.col("reset")
+        + F.lit(damping) * F.col("dangling") * F.col("reset"),
+        n_iter, damping, fp)
 
 
 def link_prediction(edges: DataFrame, min_common: int = 2,
@@ -1633,20 +1393,13 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 256,
         .where(F.col("src") != F.col("dst"))
         .distinct()
     ).transform(materialize)
-    edge_rows = _collect_small_graph(sym, small_cutoff)
-    if edge_rows is not None:
-        # Hybrid driver finish: the k-core is unique (peel-order-free), the
-        # CC canonicality argument; the wider CC-style bound applies (the
-        # peel is near-linear). small_cutoff=0 forces the distributed path.
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from hierarchical_graph_db_spark.localdf import local_rows_df
-
-        id_type = sym.schema.fields[0].dataType
-        schema = StructType([StructField("id", id_type),
-                             StructField("degree", LongType())])
-        return local_rows_df(sym.sparkSession,
-                             _driver_k_core(edge_rows, k), schema)
+    # Hybrid driver finish: the k-core is unique (peel-order-free), the
+    # CC canonicality argument; the wider CC-style bound applies (the
+    # peel is near-linear).
+    out = _driver_finish(sym, small_cutoff, "id {id}, degree bigint",
+                         lambda rows: _driver_k_core(rows, k))
+    if out is not None:
+        return out
     alive = sym
     n_prev = alive.count()
     for _ in range(max_rounds):
@@ -1687,8 +1440,6 @@ def _driver_local_clustering(edge_rows: list[tuple]) -> list[tuple]:
     and the coefficient replays the exact Spark expression —
     ``round6((2.0·T)/(deg·(deg−1)))`` on IEEE doubles (T and the degree
     product convert long→double exactly below 2^53)."""
-    from hierarchical_graph_db_spark.operators.clustering import _round6
-
     adj: dict = {}
     for a, b in edge_rows:
         adj.setdefault(a, set()).add(b)
@@ -1739,25 +1490,12 @@ def local_clustering(edges: DataFrame,
         .distinct()
         .transform(materialize)
     )
-    if small_cutoff and e.limit(32 * small_cutoff + 1).count() <= 32 * small_cutoff:
-        from pyspark.sql.types import (
-            DoubleType, LongType, StructField, StructType,
-        )
-
-        from hierarchical_graph_db_spark.localdf import (
-            collect_tuples, local_rows_df,
-        )
-
-        edge_rows = collect_tuples(e)
-        id_type = e.schema.fields[0].dataType
-        schema = StructType([
-            StructField("id", id_type),
-            StructField("degree", LongType()),
-            StructField("triangles", LongType()),
-            StructField("clustering", DoubleType()),
-        ])
-        return local_rows_df(e.sparkSession,
-                             _driver_local_clustering(edge_rows), schema)
+    out = _driver_finish(
+        e, small_cutoff,
+        "id {id}, degree bigint, triangles bigint, clustering double",
+        _driver_local_clustering)
+    if out is not None:
+        return out
     deg = (
         e.select(F.col("a").alias("id"))
         .unionAll(e.select(F.col("b").alias("id")))
@@ -1805,25 +1543,23 @@ def multi_source_distances(edges: DataFrame, sources: list[str],
                                  F.col("src").alias("dst")))
     e = e.where(F.col("src") != F.col("dst")).distinct() \
         .transform(materialize)
-    from pyspark.sql.types import StringType, StructType
-
     if isinstance(e.schema["src"].dataType, StringType):
-        edge_rows = _collect_small_graph(e, small_cutoff)
-        if edge_rows is not None:
-            # Hybrid driver finish — see :func:`shortest_paths`.
-            from hierarchical_graph_db_spark.localdf import local_rows_df
-
+        # Hybrid driver finish (canonical hop distances — the CC
+        # argument). The string-dtype gate keeps the driver path off
+        # exotic caller dtypes so the emitted schema always matches the
+        # distributed one (the seed frame pins id to string).
+        def kernel(edge_rows: list[tuple]) -> list[tuple]:
             dist = _bfs_driver(edge_rows, list(dict.fromkeys(sources)),
                                max_hops)
             # seed rows once per ORIGINAL sources entry (the distributed
             # seed frame does not dedup), hop>0 rows from the BFS map
-            rows = [(s, s, 0) for s in sources] + [
+            return [(s, s, 0) for s in sources] + [
                 (s, v, d) for (s, v), d in dist.items() if d > 0]
-            return local_rows_df(
-                e.sparkSession, rows,
-                StructType.fromDDL(
-                    "source string, id string, distance int"))
 
+        out = _driver_finish(e, small_cutoff,
+                             "source string, id string, distance int", kernel)
+        if out is not None:
+            return out
     visited = e.sparkSession.createDataFrame(
         [(s, s, 0) for s in sources], "source string, id string, distance int"
     ).transform(materialize)
@@ -1873,13 +1609,9 @@ def _driver_textrank(edge_rows: list[tuple], n_iter: int,
     """Bit-exact driver twin of the :func:`weighted_textrank` loop for
     INTEGER edge weights (the callers' shape — co-occurrence counts): the
     out-strength sum is exact integer arithmetic, the per-edge quanta
-    replay ``round(((score·w)/outw)·1e6)`` with the
-    :func:`_driver_pagerank` HALF_UP-nearest trick, and the 6dp state
+    replay ``round(((score·w)/outw)·1e6)`` through :func:`_quanta`, and
+    the 6dp state
     quantization goes through the ``_round6`` twin."""
-    import numpy as np
-
-    from hierarchical_graph_db_spark.operators.clustering import _round6
-
     verts = list(dict.fromkeys(s for s, _, _ in edge_rows))
     idx = {v: i for i, v in enumerate(verts)}
     n = len(verts)
@@ -1897,9 +1629,7 @@ def _driver_textrank(edge_rows: list[tuple], n_iter: int,
     base = 1 - damping
     score = np.full(n, 1.0, dtype=np.float64)
     for _ in range(n_iter):
-        x = ((score[src_i] * w) / outw[src_i]) * 1000000.0
-        fl = np.floor(x)
-        q = (fl + ((x - fl) >= 0.5)).astype(np.int64)
+        q = _quanta(((score[src_i] * w) / outw[src_i]) * 1000000.0)
         acc = np.zeros(n, dtype=np.int64)
         np.add.at(acc, dst_i, q)
         s = acc / 1000000.0
@@ -1926,30 +1656,18 @@ def weighted_textrank(edges: DataFrame, n_iter: int = 8,
     engines; constants enter both engines via ``repr`` so the doubles are
     identical. Callers pass symmetric edges for the undirected TextRank
     semantics (every vertex then has out-strength > 0 — no dangling term)."""
-    from pyspark.sql.types import (ByteType, DoubleType, IntegerType,
-                                   LongType, ShortType, StructField,
-                                   StructType)
-
-    if small_cutoff and isinstance(
-            edges.schema["weight"].dataType,
-            (ByteType, ShortType, IntegerType, LongType)):
+    if small_cutoff and isinstance(edges.schema["weight"].dataType,
+                                   IntegralType):
         # Hybrid driver finish — integer weights make the out-strength sum
         # exact, so the fixed-point replay is bit-identical (see
         # _driver_textrank). Double-weighted callers keep the distributed
-        # path (its partial double sums are its own contract);
-        # small_cutoff=0 forces it too.
-        ecap = edges.select("src", "dst", "weight").transform(materialize)
-        edge_rows = _collect_small_graph(ecap, small_cutoff)
-        if edge_rows is not None:
-            from hierarchical_graph_db_spark.localdf import local_rows_df
-
-            id_type = ecap.schema.fields[0].dataType
-            schema = StructType([StructField("id", id_type),
-                                 StructField("score", DoubleType())])
-            return local_rows_df(
-                ecap.sparkSession,
-                _driver_textrank(edge_rows, n_iter, damping), schema)
-        edges = ecap  # already materialized — reuse for the loop below
+        # path (its partial double sums are its own contract).
+        edges = edges.select("src", "dst", "weight").transform(materialize)
+        out = _driver_finish(edges, small_cutoff, "id {id}, score double",
+                             lambda rows: _driver_textrank(rows, n_iter,
+                                                           damping))
+        if out is not None:
+            return out
     vertices = edges.select(F.col("src").alias("id")).distinct() \
         .transform(materialize)
     outw = edges.groupBy("src").agg(F.sum("weight").alias("outw"))
@@ -1979,12 +1697,10 @@ def _driver_betweenness(edge_rows: list[tuple], sources: list,
     """Driver twin of :func:`betweenness_sampled`: per-source BFS with
     exact integer σ path counts (canonical), then Brandes' depth-by-depth
     dependency accumulation replaying the exact quantization —
-    per-successor quanta ``round(((σv/σw)·(1+δw))·1e6)`` with the HALF_UP
-    floor trick, 6dp ``_round6`` per level, and the final per-vertex
+    per-successor quanta ``round(((σv/σw)·(1+δw))·1e6)``
+    (:func:`_quanta`), 6dp ``_round6`` per level, and the final per-vertex
     fixed-point sum. Depth-(≥1) rows only feed the final sum, exactly like
     the distributed ``acc`` union."""
-    from hierarchical_graph_db_spark.operators.clustering import _round6
-
     succ: dict = {}
     for s, d in edge_rows:
         succ.setdefault(s, []).append(d)
@@ -2010,16 +1726,12 @@ def _driver_betweenness(edge_rows: list[tuple], sources: list,
     if depths == 0:
         return []
 
-    def quanta(x: float) -> int:
-        fl = math.floor(x)
-        return int(fl) + (1 if (x - fl) >= 0.5 else 0)
-
     delta: dict = {}  # (source, v) at the CURRENT deeper level -> δ
     acc_q: dict = {}  # v -> Σ round(δ·1e6) over depth ≥ 1 rows
     dl = {(sv, v): 0.0 for (sv, v), (d, _) in info.items() if d == depths}
     for d in range(depths, 0, -1):
         for (sv, v), dv in dl.items():
-            acc_q[v] = acc_q.get(v, 0) + quanta(dv * 1000000.0)
+            acc_q[v] = acc_q.get(v, 0) + int(_quanta(dv * 1000000.0))
         nxt_dl = {}
         for (sv, v), (dist_v, sig_v) in info.items():
             if dist_v != d - 1:
@@ -2031,8 +1743,8 @@ def _driver_betweenness(edge_rows: list[tuple], sources: list,
                 if key in dl:
                     hit = True
                     sig_w = info[key][1]
-                    q += quanta(((sig_v / sig_w) * (1.0 + dl[key]))
-                                * 1000000.0)
+                    q += int(_quanta(((sig_v / sig_w) * (1.0 + dl[key]))
+                                     * 1000000.0))
             nxt_dl[(sv, v)] = _round6(q / 1000000.0) if hit else 0.0
         dl = nxt_dl
     return [(v, _round6(s / 1000000.0)) for v, s in acc_q.items()]
@@ -2067,19 +1779,14 @@ def betweenness_sampled(edges: DataFrame, sources: list[str],
     spark = edges.sparkSession
     e = (edges.select("src", "dst").where(F.col("src") != F.col("dst"))
          .distinct().transform(materialize))
-    from pyspark.sql.types import StringType, StructType
-
     if isinstance(e.schema["src"].dataType, StringType):
-        edge_rows = _collect_small_graph(e, small_cutoff)
-        if edge_rows is not None:
-            # Hybrid driver finish — exact σ counts + quantized Brandes
-            # accumulation replayed verbatim (:func:`_driver_betweenness`);
-            # small_cutoff=0 forces the distributed two-phase plan.
-            from hierarchical_graph_db_spark.localdf import local_rows_df
-
-            return local_rows_df(
-                spark, _driver_betweenness(edge_rows, sources, max_hops),
-                StructType.fromDDL("id string, betweenness double"))
+        # Hybrid driver finish — exact σ counts + quantized Brandes
+        # accumulation replayed verbatim (:func:`_driver_betweenness`).
+        out = _driver_finish(
+            e, small_cutoff, "id string, betweenness double",
+            lambda rows: _driver_betweenness(rows, sources, max_hops))
+        if out is not None:
+            return out
     visited = spark.createDataFrame(
         [(s, s, 0, 1) for s in sources],
         "source string, id string, dist int, sigma bigint",
@@ -2169,6 +1876,23 @@ def _driver_ktruss(edge_rows: list[tuple], k: int,
     return [(a, b, sup[(a, b)]) for a, b in e]
 
 
+def _truss_support(e: DataFrame) -> DataFrame:
+    """Per-edge triangle support over the canonical (a < b) edge set →
+    (a, b, support): common neighbors via TWO keyed equi-joins
+    (edge→(a,c) then (b,c) membership — the triangle-count join shape,
+    never a neighborhood cross product) + one hash aggregate. Edges in no
+    triangle are absent."""
+    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")) \
+        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
+    cand = (e.join(adj.withColumnRenamed("u", "a")
+                   .withColumnRenamed("v", "c"), on="a")
+            .where(F.col("c") != F.col("b")))
+    return (cand.join(adj.select(F.col("u").alias("b"),
+                                 F.col("v").alias("c")), on=["b", "c"])
+            .groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("support")))
+
+
 def ktruss_edges(edges: DataFrame, k: int = 4,
                  n_rounds: int = 3, small_cutoff: int = 4096) -> DataFrame:
     """Fixed-round k-truss pruning (Cohen 2008, public method) over the
@@ -2190,48 +1914,19 @@ def ktruss_edges(edges: DataFrame, k: int = 4,
                         F.greatest("src", "dst").alias("b"))
            .where(F.col("a") != F.col("b"))
            .distinct().transform(materialize))
-    edge_rows = _collect_small_graph(und, small_cutoff)
-    if edge_rows is not None:
-        # Hybrid driver finish: support counts are integers and the prune
-        # replays the same fixed rounds — no arithmetic to twin.
-        # small_cutoff=0 forces the distributed join shape.
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from hierarchical_graph_db_spark.localdf import local_rows_df
-
-        id_type = und.schema.fields[0].dataType
-        schema = StructType([StructField("a", id_type),
-                             StructField("b", id_type),
-                             StructField("support", LongType())])
-        return local_rows_df(und.sparkSession,
-                             _driver_ktruss(edge_rows, k, n_rounds), schema)
+    # Hybrid driver finish: support counts are integers and the prune
+    # replays the same fixed rounds — no arithmetic to twin.
+    out = _driver_finish(und, small_cutoff, "a {id}, b {id}, support bigint",
+                         lambda rows: _driver_ktruss(rows, k, n_rounds))
+    if out is not None:
+        return out
     e = und
     min_sup = k - 2
     for _ in range(n_rounds):
-        adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")) \
-            .unionByName(e.select(F.col("b").alias("u"),
-                                  F.col("a").alias("v")))
-        cand = (e.join(adj.withColumnRenamed("u", "a")
-                       .withColumnRenamed("v", "c"), on="a")
-                .where(F.col("c") != F.col("b")))
-        sup = (cand.join(adj.select(F.col("u").alias("b"),
-                                    F.col("v").alias("c")),
-                         on=["b", "c"])
-               .groupBy("a", "b")
-               .agg(F.count(F.lit(1)).alias("support")))
-        e = (e.join(sup, on=["a", "b"], how="left")
+        e = (e.join(_truss_support(e), on=["a", "b"], how="left")
              .where(F.coalesce("support", F.lit(0)) >= min_sup)
              .select("a", "b")).transform(materialize)
     # final support over the surviving subgraph, reported with the edges
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")) \
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-    cand = (e.join(adj.withColumnRenamed("u", "a")
-                   .withColumnRenamed("v", "c"), on="a")
-            .where(F.col("c") != F.col("b")))
-    sup = (cand.join(adj.select(F.col("u").alias("b"),
-                                F.col("v").alias("c")), on=["b", "c"])
-           .groupBy("a", "b")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("support")))
-    return e.join(sup, on=["a", "b"], how="left").select(
+    return e.join(_truss_support(e), on=["a", "b"], how="left").select(
         "a", "b", F.coalesce("support", F.lit(0).cast("bigint"))
         .alias("support"))

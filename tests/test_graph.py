@@ -42,13 +42,21 @@ def test_connected_components(spark):
 def test_connected_components_long_chain_converges_fast(spark):
     """A 64-node chain has diameter 63; pointer jumping must converge well
     within 12 rounds (log-diameter behavior), where plain propagation would
-    need 63."""
-    chain = [Row(src=f"v{i:03d}", dst=f"v{i+1:03d}") for i in range(63)]
-    cc = {r["id"]: r["component"]
-          for r in connected_components(spark.createDataFrame(chain),
-                                        max_iter=12).collect()}
-    assert set(cc.values()) == {"v000"}
-    assert len(cc) == 64
+    need 63 — on the driver finish and on the distributed loop alike. The
+    distributed loop converges or raises: one round cannot label the
+    chain, and a partial labeling must not come back silently."""
+    import pytest
+
+    chain = spark.createDataFrame(
+        [Row(src=f"v{i:03d}", dst=f"v{i+1:03d}") for i in range(63)])
+    for cutoff in (16384, 0):
+        cc = {r["id"]: r["component"]
+              for r in connected_components(chain, max_iter=12,
+                                            small_cutoff=cutoff).collect()}
+        assert set(cc.values()) == {"v000"}, cutoff
+        assert len(cc) == 64, cutoff
+    with pytest.raises(RuntimeError, match="connected_components"):
+        connected_components(chain, max_iter=1, small_cutoff=0)
 
 
 def test_connected_components_matches_union_find(spark):
@@ -424,21 +432,6 @@ def test_rank_grid_resolution_and_budget():
         _resolve_fp(10, "nope")
 
 
-def test_rank_grid_env_override(monkeypatch):
-    """SPARK_GRAFT_RANK_GRID forces the grid for verification sweeps
-    regardless of the caller's argument."""
-    from hierarchical_graph_db_spark.operators.graph import (
-        _RANK_FP,
-        _relative_fp,
-        _resolve_fp,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_RANK_GRID", "relative")
-    assert _resolve_fp(150, "absolute") == _relative_fp(150)
-    monkeypatch.setenv("SPARK_GRAFT_RANK_GRID", "absolute")
-    assert _resolve_fp(10**9, "relative") == _RANK_FP
-
-
 def test_hits_has_no_grid_parameter(spark):
     """The round-10 ``hits(grid=...)`` parameter validated its value and
     then did nothing (HITS max-norm state is already scale-relative) —
@@ -452,27 +445,48 @@ def test_hits_has_no_grid_parameter(spark):
         hits(spark.createDataFrame(EDGES), grid="absolute")
 
 
-def test_rank_grid_env_override_warns_on_conflict(monkeypatch):
-    """SPARK_GRAFT_RANK_GRID still wins (sweep contract) but now emits a
-    RuntimeWarning when it CHANGES the caller's request — a lingering env
-    var in a sweep shell is detectable instead of silent (ADVICE r10)."""
-    import pytest
+def _group_job_count(sc, group, fn):
+    """Number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
+
+def test_graph_operators_fixed_spark_jobs(spark):
+    """Host-independent job counts of the graph family's driver-finish and
+    distributed paths, result collect included, so a change to the shared
+    gate or fixpoint loop that adds or drops a Spark job shows up here.
+    The SCC input retires in one FW-BW round: on inputs that need a second
+    round, AQE's concurrent stage submission makes the count vary by one
+    job from run to run."""
     from hierarchical_graph_db_spark.operators.graph import (
-        _RANK_FP,
-        _relative_fp,
-        _resolve_fp,
+        strongly_connected_components,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_GRID", "absolute")
-    with pytest.warns(RuntimeWarning, match="overrides the requested"):
-        assert _resolve_fp(150, "relative") == _RANK_FP
-    # No warning when the override agrees with the request.
-    import warnings as _w
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        assert _resolve_fp(150, "absolute") == _RANK_FP
-    monkeypatch.delenv("SPARK_GRAFT_RANK_GRID")
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        assert _resolve_fp(150, "relative") == _relative_fp(150)
+    # two 3-cycles joined by a bridge, a tail and a dangling sink
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
+         ("e", "f"), ("f", "d"), ("f", "g"), ("g", "h"), ("h", "i")],
+        "src string, dst string")
+    cycles = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "e"), ("e", "d")],
+        "src string, dst string")
+    calls = {
+        "pagerank-driver": lambda: pagerank(edges).collect(),
+        "pagerank-distributed":
+            lambda: pagerank(edges, n_iter=3, small_cutoff=0).collect(),
+        "cc-driver": lambda: connected_components(edges).collect(),
+        "cc-distributed":
+            lambda: connected_components(edges, small_cutoff=0).collect(),
+        "scc-distributed": lambda: strongly_connected_components(
+            cycles, small_cutoff=0).collect(),
+    }
+    sc = spark.sparkContext
+    got = {name: _group_job_count(sc, f"graph-jobs-{name}", fn)
+           for name, fn in calls.items()}
+    assert got == {"pagerank-driver": 8, "pagerank-distributed": 46,
+                   "cc-driver": 5, "cc-distributed": 29,
+                   "scc-distributed": 59}, got

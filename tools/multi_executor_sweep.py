@@ -30,7 +30,7 @@ branch of ``materialize()``); exit status 1 on any mismatch.
     python tools/multi_executor_sweep.py SF_DIR MULTIEXEC_rN.json q1 q2 \
         --equivalence \
         --masters 'local,local-cluster[2,4,4096]' \
-        --env-grid SPARK_GRAFT_RANK_GRID=absolute,relative
+        --env-grid SPARK_GRAFT_SHUFFLE_PARTITIONS=4,16
 """
 
 from __future__ import annotations
