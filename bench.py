@@ -1,7 +1,8 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}. The driver records this as BENCH_r{N}.json
+"queries": {name: sec}, "sf": ..., "cpus": ..., "defaultParallelism": ...}.
+``cpus`` is $SPARK_GRAFT_CPUS, else the cores this process may run on. The driver records this as BENCH_r{N}.json
 and grades against BASELINE.md (target: within 2× at the same scale factor).
 
 Each query is timed end-to-end (plan + execute + collect). A short warmup
@@ -19,7 +20,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-N_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+N_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+             or len(os.sched_getaffinity(0)))
 
 # Calibration work unit: a fixed sha256 chain. Deterministic, allocation-free,
 # independent of Spark/JVM — pure host CPU. Emitted with every bench run so
@@ -357,7 +359,10 @@ def main() -> None:
     # left the round-over-round PERF comparison blind (n_common: 0) two
     # rounds running. The bulky diagnostics move to a side file
     # (BENCH_META.json, next to this script); the line keeps the driver
-    # contract fields plus two scalars.
+    # contract fields plus four scalars: the host factor, the ingest rate,
+    # and the core count and defaultParallelism the walls were taken at
+    # (without them a serial regression reads the same as an entry bound
+    # by fixed per-job overhead).
     out = {
         "metric": "headline_queries_total_runtime",
         "value": round(sum(timings.values()), 3),
@@ -366,6 +371,8 @@ def main() -> None:
         "sf": sf,
         "ingest_emails_per_sec": round(n_emails / ingest_sec, 1),
         "host_factor": factor,
+        "cpus": N_CPUS,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
     }
     meta = {
         "calibration": cal_end,

@@ -1,14 +1,15 @@
-"""Vectorized Arrow/numpy fast path for the nearest-centroid kernel.
+"""Vectorized Arrow/numpy nearest-centroid kernel: the one corpus-side
+path of k-means assignment, seeding pass B, sharded (PQ / per-shard
+SemDeDup) assignment and IVF list assignment.
 
-The k-means / IVF default path computes every point-to-centroid distance
-with a Catalyst higher-order fold over literal centroid arrays
-(``operators/clustering._sq_dist``) — declarative, zero-exchange, and
-bit-replayable by the SQL oracle, but Spark HOFs don't participate in
-whole-stage codegen, so the per-row cost is interpreted expression eval.
-``PLANS.md`` (round-6 bench notes) names the pragmatic flip for cluster
-scale: an Arrow-batched numpy kernel **plus an exact rescore** so the fast
-path stays bit-identical to the fold, kept OUT of the default path (the
-registry/oracle queries keep the pure-expression plan).
+A Catalyst higher-order fold over literal centroid arrays
+(``operators/clustering._sq_dist``, still used for the small query-side
+IVF probe ranking and PQ encoding) is declarative and zero-exchange, but
+Spark HOFs don't participate in whole-stage codegen, so its per-row cost
+is interpreted expression eval. ``PLANS.md`` (round-6 bench notes) names
+the flip for cluster scale: an Arrow-batched numpy kernel **plus an exact
+rescore**, so every result stays bit-identical to the fold and to the SQL
+oracle's replay.
 
 Exact-parity discipline (why this is a rescore, not an approximation):
 
@@ -17,7 +18,7 @@ Exact-parity discipline (why this is a rescore, not an approximation):
   additions in the same order, so its last column is **bit-identical** to
   the Spark fold — no gemm / pairwise-summation shortcut is taken, because
   those reorder the adds and can flip the 6dp rounding at boundaries;
-* the default path compares centroids on ``round(d, 6)`` (ties → smallest
+* the oracle compares centroids on ``round(d, 6)`` (ties → smallest
   centroid id). Rounding is monotone, so the exact-distance argmin can only
   disagree with the rounded argmin when two exact distances lie within
   1e-6 of each other. The kernel therefore short-lists candidates within a
@@ -30,11 +31,12 @@ Exact-parity discipline (why this is a rescore, not an approximation):
   ``_round6`` twin, one call per output row.
 
 The kernel runs as a **scalar Pandas UDF** (Arrow batches, no row-set
-rewrite): every other column of the frame stays JVM-side, so the fast path
+rewrite): every other column of the frame stays JVM-side, so the kernel
 composes with the existing plans — `assign_lists` keeps its pushed-down
 scan and `l2_norm` projection, k-means keeps its fixed-point centroid
-aggregate. Opt-in via ``use_arrow=True`` on ``kmeans`` / ``ivf_topk`` /
-``assign_lists``; parity is pinned by ``tests/test_arrow_fastpath.py``.
+aggregate. Parity is pinned by ``tests/test_arrow_fastpath.py`` (kernel
+ties and the fold) and ``tests/test_quantizer_oracle.py`` (the registry
+queries against the DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -60,8 +62,8 @@ def _exact_fold_dists(V: np.ndarray, C: np.ndarray) -> np.ndarray:
 def nearest_centroid_batch(cents: list[tuple], V: np.ndarray,
                            need_dist: bool) -> tuple[np.ndarray, np.ndarray | None]:
     """Vectorized argmin over ``round(d, 6)`` with ties → smallest centroid
-    id — the exact total order of ``clustering._argmin_literal`` and
-    ``ivf.assign_lists``. Returns (cid per row, rounded dist per row or
+    id — the exact total order of the oracle's ``ORDER BY d, cid``.
+    Returns (cid per row, rounded dist per row or
     None)."""
     from hierarchical_graph_db_spark.operators.clustering import _round6
 
@@ -97,9 +99,8 @@ def _stack(series: pd.Series) -> np.ndarray:
 
 
 def assign_struct_udf(cents: list[tuple], cid_ddl: str):
-    """Scalar Pandas UDF ``vec -> struct<cid, d: double>`` — the Arrow twin
-    of ``clustering._argmin_literal`` (k-means assignment with reported
-    distance)."""
+    """Scalar Pandas UDF ``vec -> struct<cid, d: double>`` — k-means
+    assignment with reported distance (``clustering._assigned_cid_vec``)."""
     def fn(vs: pd.Series) -> pd.DataFrame:
         cid, d = nearest_centroid_batch(cents, _stack(vs), need_dist=True)
         return pd.DataFrame({"cid": cid, "d": d})
@@ -108,10 +109,9 @@ def assign_struct_udf(cents: list[tuple], cid_ddl: str):
 
 
 def sharded_assign_udf(state: list[tuple], cid_ddl: str):
-    """Scalar Pandas UDF ``(shard, vec) -> struct<cid, d>`` — the Arrow twin
-    of ``clustering._assign_sharded``'s per-row argmin against the row's OWN
-    shard's centroids (``array_sort(struct(round6(d), cid))[0]`` over the
-    broadcast-joined centroid array). Same total order as
+    """Scalar Pandas UDF ``(shard, vec) -> struct<cid, d>`` — the per-row
+    argmin against the row's OWN shard's centroids
+    (``clustering._assign_sharded``). Same total order as
     :func:`nearest_centroid_batch` (rounded distance asc, cid asc), applied
     per shard group within each Arrow batch. Every shard present in the
     input MUST appear in ``state`` (the seeding pass guarantees it — it
@@ -138,9 +138,9 @@ def sharded_assign_udf(state: list[tuple], cid_ddl: str):
 
 
 def pool_min_dist_udf(pool: list[list[float]]):
-    """Scalar Pandas UDF ``vec -> double`` — the Arrow twin of the seeding
-    pass-B expression ``array_min(transform(pool, c -> round(sqdist(v, c),
-    6)))`` (``clustering._seed_rows``). Bit-identity argument: each
+    """Scalar Pandas UDF ``vec -> double`` — the seeding pass-B min
+    distance ``array_min(transform(pool, c -> round(sqdist(v, c), 6)))``
+    (``clustering._seed_rows``). Bit-identity argument: each
     point-to-candidate distance is the exact sequential fold
     (:func:`_exact_fold_dists`), and HALF_UP rounding is monotone
     (d₁ ≤ d₂ ⇒ round6(d₁) ≤ round6(d₂)), so the min of the rounded
@@ -164,8 +164,8 @@ def pool_min_dist_udf(pool: list[list[float]]):
 
 
 def list_id_udf(centers: list[list[float]]):
-    """Scalar Pandas UDF ``vec -> int`` — the Arrow twin of the
-    ``ivf.assign_lists`` rounded-argmin (list ids are centroid positions)."""
+    """Scalar Pandas UDF ``vec -> int`` — the ``ivf.assign_lists``
+    rounded argmin (list ids are centroid positions)."""
     cents = [(i, c) for i, c in enumerate(centers)]
 
     def fn(vs: pd.Series) -> pd.Series:

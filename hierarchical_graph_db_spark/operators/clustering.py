@@ -8,13 +8,12 @@ the same family as ANN/centroid cohesion (``operators/similarity.py``).
 
 Scale shape per Lloyd round (the only shapes that survive 100 TB):
 
-* assignment — the k×dim trained centroids are PLAN LITERALS (kilobytes):
-  the per-row argmin is a pure expression (`array_sort` over k rounded
-  fold-distances), evaluated inside the scan's project — **no join and no
-  exchange at all** (the round-5 verdict's fix for the
-  crossJoin(broadcast)+groupBy assignment, which moved the whole corpus
-  through a pid-keyed shuffle per round; the technique
-  ``operators/ivf.assign_lists`` pioneered, generalized here);
+* assignment — the k×dim trained centroids ride in the plan as constants
+  (kilobytes) of one scalar Arrow UDF (``operators/arrow_kernels``), whose
+  per-row argmin over k rounded fold-distances is evaluated inside the
+  scan's project — **no join and no exchange at all** (the round-5
+  verdict's fix for the crossJoin(broadcast)+groupBy assignment, which
+  moved the whole corpus through a pid-keyed shuffle per round);
 * update — posexplode to (cluster, dim, component) and ONE hash aggregate:
   partial aggregation collapses map-side, shuffle volume is O(k × dim)
   regardless of corpus size; the k×dim result is collected to the driver
@@ -50,9 +49,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from hierarchical_graph_db_spark.materialize import materialize
 
 
 def _sq_dist(a, b) -> F.Column:
@@ -122,11 +119,18 @@ def _lit_vec(v) -> F.Column:
 # aggregate fold over literal arrays here — the 1280-node tree blows the
 # whole-stage-codegen method budget and falls back to per-node interpreted
 # eval with duplicated element_at work, plus a fresh Janino compile per
-# Lloyd round. The fold keeps the tree O(1): two array literals, one lambda.
+# trained state. The fold keeps the tree O(1): two array literals, one lambda.
 
 
-def _seed_rows(pts: DataFrame, k: int,
-               oversample: int = 8, use_arrow: bool = False) -> list[tuple]:
+def _sha_sample(pts: DataFrame, n: int) -> DataFrame:
+    """The ``n`` points with the smallest ``sha256(pid)`` (ties on pid): a
+    data-independent pseudo-uniform draw, as a TakeOrdered top-N — no
+    shuffle. :func:`_sha_hex` is its driver twin's sort key."""
+    return pts.orderBy(F.sha2(F.col("pid").cast("string"), 256),
+                       F.col("pid")).limit(n)
+
+
+def _seed_rows(pts: DataFrame, k: int, oversample: int = 8) -> list[tuple]:
     """Deterministic k-means‖-style seeding in TWO corpus passes (constant
     in k), then k-center greedy over the candidate pool only. Returns the
     seed list [(cid, c)] driver-side.
@@ -137,10 +141,10 @@ def _seed_rows(pts: DataFrame, k: int,
     * pass B — the ``oversample·k`` points farthest (6dp min-dist, ties on
       smallest pid) from the pass-A pool: recovers small, distant clusters
       a uniform draw can miss (the d²-weighting of k-means‖, derandomized
-      to a top-L). The pass-A pool rides along as an array-of-vectors PLAN
-      LITERAL, so the min-dist is a pure ``array_min(transform(...))``
-      expression — no anti-join, no cross join, no shuffle (round-5
-      verdict item 2 applied to seeding as well);
+      to a top-L). The pass-A pool rides along as a constant of the Arrow
+      kernel ``arrow_kernels.pool_min_dist_udf`` (|corpus| × L exact folds,
+      vectorized per batch) — no anti-join, no cross join, no shuffle
+      (round-5 verdict item 2 applied to seeding as well);
     * refine — k-center greedy over the ≤2L candidate rows, DRIVER-side
       (the k-means‖ paper's own final step: recluster the O(k·oversample)
       candidate pool on one machine). The collect is the candidate pool,
@@ -148,38 +152,18 @@ def _seed_rows(pts: DataFrame, k: int,
       — and replaces 2(k−1) tiny Spark jobs with plain Python that lands
       on bit-identical doubles (HALF_UP rounding twin of Spark's round).
 
-    Both passes are top-L selections (TakeOrdered — no corpus shuffle).
-    ``use_arrow`` flips the pass-B min-distance to the bit-identical Arrow
-    kernel (``arrow_kernels.pool_min_dist_udf``) — the pass-B expression is
-    |corpus| × L interpreted fold evaluations, the measured seeding
-    hotspot (guide §4: vectorize the Python-side batch instead)."""
+    Both passes are top-L selections (TakeOrdered — no corpus shuffle)."""
+    from hierarchical_graph_db_spark.operators.arrow_kernels import (
+        pool_min_dist_udf,
+    )
+
     n_cand = oversample * k
-    a_rows = [
-        (r["pid"], list(r["v"]))
-        for r in pts.orderBy(F.sha2(F.col("pid").cast("string"), 256),
-                             F.col("pid"))
-        .limit(n_cand)
-        .select("pid", "v")
-        .collect()
-    ]
+    a_rows = [(r["pid"], list(r["v"]))
+              for r in _sha_sample(pts, n_cand).select("pid", "v").collect()]
     if not a_rows:
         return []
     pool = [[float(x) for x in v] for _, v in a_rows]
-    if use_arrow:
-        from hierarchical_graph_db_spark.operators.arrow_kernels import (
-            pool_min_dist_udf,
-        )
-
-        mind = pool_min_dist_udf(pool)(F.col("v"))
-    else:
-        from hierarchical_graph_db_spark.functions.fastlit import (
-            lit_double_matrix,
-        )
-
-        pool_a = lit_double_matrix(pool)
-        mind = F.array_min(
-            F.transform(pool_a, lambda c: F.round(_sq_dist(F.col("v"), c),
-                                                  6)))
+    mind = pool_min_dist_udf(pool)(F.col("v"))
     b_rows = [
         (r["pid"], list(r["v"]))
         for r in pts.where(~F.col("pid").isin([pid for pid, _ in a_rows]))
@@ -190,18 +174,6 @@ def _seed_rows(pts: DataFrame, k: int,
         .collect()
     ]
     return _greedy_seeds(a_rows + b_rows, k)
-
-
-def oversampled_seeds(pts: DataFrame, k: int,
-                      oversample: int = 8) -> DataFrame:
-    """DataFrame form of :func:`_seed_rows` — k driver-materialized local
-    rows (cid, c); the plan carries no corpus lineage."""
-    seeds = _seed_rows(pts, k, oversample)
-    schema = StructType([
-        StructField("cid", pts.schema["pid"].dataType, False),
-        StructField("c", ArrayType(DoubleType()), False),
-    ])
-    return pts.sparkSession.createDataFrame(seeds, schema)
 
 
 def _project(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -217,84 +189,63 @@ def _project(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _argmin_literal(cents: list[tuple], cid_type) -> F.Column:
-    """struct(d, cid) of the point's nearest centroid, as a PURE expression
-    over the k centroid literals: ``array_sort`` of k rounded
-    fold-distances picks the lexicographic min (dist 6dp asc, cid asc) —
-    the exact total order of the former struct-min and of the oracle's
-    ``ORDER BY d, cid``. Assignment therefore runs inside the scan's
-    project: no join, no exchange, ever. The k centroids and their ids ride
-    as TWO literal array nodes zip_with'd together — the expression tree is
-    O(1) in k and dim, so analysis/codegen stay cheap however the literals
-    change between rounds (see the distance-kernel NOTE above)."""
-    from hierarchical_graph_db_spark.functions.fastlit import (
-        lit_double_matrix,
-        lit_index_array,
+def _assigned_cid_vec(pts: DataFrame, cents: list[tuple]) -> DataFrame:
+    """(pid, cid, d, v) per point — the Lloyd-update input: the Arrow
+    nearest-centroid kernel (``arrow_kernels.assign_struct_udf``) over the
+    k centroid constants, ordered by (6dp distance, cid) — the exact total
+    order of the oracle's ``ORDER BY d, cid``."""
+    from hierarchical_graph_db_spark.operators.arrow_kernels import (
+        assign_struct_udf,
     )
 
-    cent_arr = lit_double_matrix([c for _, c in cents])
-    cid_arr = lit_index_array([cid for cid, _ in cents])
-    scored = F.zip_with(
-        cent_arr, cid_arr,
-        lambda c, cid: F.struct(
-            F.round(_sq_dist(F.col("v"), c), 6).alias("d"),
-            cid.cast(cid_type).alias("cid")))
-    return F.array_sort(scored)[0]
-
-
-def _assigned_cid_vec(pts: DataFrame, cents: list[tuple],
-                      use_arrow: bool) -> DataFrame:
-    """(cid, v) per point — the Lloyd-update input. Default: the pure
-    literal-argmin expression. ``use_arrow``: the bit-identical Arrow
-    kernel (``operators/arrow_kernels``), an opt-in fast path for when the
-    interpreted HOF fold is the measured bottleneck (r6 verdict item 4)."""
-    cid_type = pts.schema["pid"].dataType
-    if use_arrow:
-        from hierarchical_graph_db_spark.operators.arrow_kernels import (
-            assign_struct_udf,
-        )
-
-        best = assign_struct_udf(cents, cid_type.simpleString())(F.col("v"))
-    else:
-        best = _argmin_literal(cents, cid_type)
+    cid_ddl = pts.schema["pid"].dataType.simpleString()
+    best = assign_struct_udf(cents, cid_ddl)(F.col("v"))
     return pts.select(F.col("pid"), best["cid"].alias("cid"),
                       best["d"].alias("d"), "v")
 
 
+def _centroid_update(assigned: DataFrame, keys: list[str]) -> dict:
+    """One Lloyd update over an assigned (*keys, cid, v) frame: the new
+    centroids {(*key, cid): c}, sorted by key, as ONE full-scan aggregate
+    whose partials collapse map-side (shuffle O(keys × k × dim) bigint/count
+    cells) and one collect of those cells.
+
+    Mean via fixed-point bigint sum: quantize components to 1e-6, sum
+    exactly (integer addition commutes under partial aggregation), divide
+    once — deterministic under any partitioning, where a double avg's
+    partial-sum order can flip the 6dp rounding. The select of (*keys, cid,
+    v) comes first: a generator (posexplode) in the same projection as the
+    struct-field access makes the analyzer drop the struct's field names
+    (FIELD_NOT_FOUND col1/col2)."""
+    cells = (
+        assigned.select(*keys, "cid", "v")
+        .select(*keys, "cid", F.posexplode("v").alias("pos", "x"))
+        .groupBy(*keys, "cid", "pos")
+        .agg(F.sum(F.round(F.col("x") * 1000000).cast("bigint")).alias("s"),
+             F.count(F.lit(1)).alias("n"))
+        .select(*keys, "cid", "pos",
+                F.round((F.col("s") / F.lit(1000000.0)) / F.col("n"), 6)
+                .alias("c"))
+        .collect()
+    )
+    comps: dict = {}
+    for r in cells:
+        comps.setdefault(tuple(r)[:-2], {})[r["pos"]] = r["c"]
+    return {key: [comp[p] for p in sorted(comp)]
+            for key, comp in sorted(comps.items())}
+
+
 def _train(pts: DataFrame, k: int, n_rounds: int,
-           oversample: int = 8, use_arrow: bool = False) -> list[tuple]:
+           oversample: int = 8) -> list[tuple]:
     """``n_rounds`` of Lloyd iteration from the oversampled seeds; centroids
-    live driver-side as [(cid, c)] literals between rounds. Per round: one
-    full-scan aggregate whose partials collapse map-side (shuffle O(k×dim)
-    bigint/count cells), one k×dim-row collect. Nothing else moves."""
-    cents = _seed_rows(pts, k, oversample, use_arrow=use_arrow)
+    live driver-side as [(cid, c)] between rounds. Per round: one
+    :func:`_centroid_update`. Nothing else moves."""
+    cents = _seed_rows(pts, k, oversample)
     if not cents:
         return []
     for _ in range(n_rounds):
-        # Mean via fixed-point bigint sum: quantize components to 1e-6,
-        # sum exactly (integer addition commutes under partial aggregation),
-        # divide once — deterministic under any partitioning, where a
-        # double avg's partial-sum order can flip the 6dp rounding.
-        # Two-step select: a generator (posexplode) in the same projection
-        # as the struct-field access makes the analyzer drop the struct's
-        # field names (FIELD_NOT_FOUND col1/col2), so assign first.
-        upd = (
-            _assigned_cid_vec(pts, cents, use_arrow).select("cid", "v")
-            .select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.sum(F.round(F.col("x") * 1000000).cast("bigint"))
-                 .alias("s"),
-                 F.count(F.lit(1)).alias("n"))
-            .select("cid", "pos",
-                    F.round((F.col("s") / F.lit(1000000.0)) / F.col("n"), 6)
-                    .alias("c"))
-            .collect()
-        )
-        by_cid: dict = {}
-        for r in upd:
-            by_cid.setdefault(r["cid"], {})[r["pos"]] = r["c"]
-        cents = [(cid, [comp[p] for p in sorted(comp)])
-                 for cid, comp in sorted(by_cid.items())]
+        upd = _centroid_update(_assigned_cid_vec(pts, cents), [])
+        cents = [(cid, c) for (cid,), c in upd.items()]
     return cents
 
 
@@ -339,6 +290,27 @@ def _collect_pid_vecs(df: DataFrame) -> list[tuple]:
         return [(r["pid"], [float(x) for x in r["v"]]) for r in df.collect()]
 
 
+def _np_lloyd_round(cents: list[tuple], V, quanta) -> list[tuple]:
+    """Driver twin of one ``_assigned_cid_vec`` + :func:`_centroid_update`
+    round over the rows ``V`` (with their ``round(x·1e6)`` quanta): the
+    pinned bit-identical argmin (``arrow_kernels.nearest_centroid_batch``),
+    int64 sums (integer addition commutes — the same argument that makes
+    the distributed partial aggregation partition-independent), then
+    ``_round6((s/1e6)/n)`` with the same long→double conversion."""
+    from hierarchical_graph_db_spark.operators.arrow_kernels import (
+        nearest_centroid_batch,
+    )
+
+    cids, _ = nearest_centroid_batch(cents, V, need_dist=False)
+    by_cid: dict = {}
+    for cid in dict.fromkeys(cids.tolist()):
+        mask = cids == cid
+        s = quanta[mask].sum(axis=0)
+        n = int(mask.sum())
+        by_cid[cid] = [_round6((float(si) / 1000000.0) / float(n)) for si in s]
+    return sorted(by_cid.items())
+
+
 def train_rows_local(rows: list[tuple], k: int, n_rounds: int,
                      oversample: int = 8) -> list[tuple]:
     """Driver twin of :func:`_seed_rows` + :func:`_train` over an
@@ -356,20 +328,14 @@ def train_rows_local(rows: list[tuple], k: int, n_rounds: int,
       round(min) == min(round)); top-L by (mind desc, pid asc);
     * greedy — :func:`_greedy_seeds`, shared verbatim with the distributed
       path (it was already driver-side);
-    * Lloyd round — assignment via ``arrow_kernels.nearest_centroid_batch``
-      (the pinned bit-identical argmin) and the fixed-point update: per-row
-      component quanta ``round(x·1e6)`` (:func:`_np_round_half_up_int64`),
-      int64 sums (integer addition commutes — the same argument that makes
-      the distributed partial aggregation partition-independent), then
-      ``_round6((s/1e6)/n)`` with the same long→double conversion.
+    * Lloyd round — :func:`_np_lloyd_round`.
 
-    Pinned bitwise against the distributed trainer in
-    ``tests/test_kmeans_driver_twin.py``."""
+    Pinned bitwise against the distributed trainer (:func:`_train` over the
+    same top-N rows) in ``tests/test_kmeans_driver_twin.py``."""
     import numpy as np
 
     from hierarchical_graph_db_spark.operators.arrow_kernels import (
         _exact_fold_dists,
-        nearest_centroid_batch,
     )
 
     if not rows:
@@ -393,16 +359,7 @@ def train_rows_local(rows: list[tuple], k: int, n_rounds: int,
     allV = np.asarray([v for _, v in rows], dtype=np.float64)
     quanta = _np_round_half_up_int64(allV * 1000000.0)
     for _ in range(n_rounds):
-        cids, _ = nearest_centroid_batch(cents, allV, need_dist=False)
-        by_cid: dict = {}
-        for cid in dict.fromkeys(cids.tolist()):
-            mask = cids == cid
-            s = quanta[mask].sum(axis=0)
-            n = int(mask.sum())
-            by_cid[cid] = [
-                _round6((float(si) / 1000000.0) / float(n)) for si in s
-            ]
-        cents = [(cid, c) for cid, c in sorted(by_cid.items())]
+        cents = _np_lloyd_round(cents, allV, quanta)
     return cents
 
 
@@ -412,16 +369,11 @@ def sharded_train_rows_local(shard_rows: dict, k: int, n_rounds: int,
     :func:`sharded_kmeans_state` Lloyd loop over an already-pulled bounded
     sample, per shard — the sampled-PQ counterpart of
     :func:`train_rows_local` (same pinned twin recipes: sha-hex draw order,
-    exact-fold distances, ``nearest_centroid_batch`` argmin, fixed-point
-    int64 update, ``_round6`` quantization). ``shard_rows`` maps shard →
-    [(pid, vector)]. The sharded seeding has no pass B — shards ARE the
-    coarse structure — exactly as the distributed trainer. Pinned bitwise in
-    ``tests/test_kmeans_driver_twin.py``."""
+    exact-fold distances, :func:`_np_lloyd_round`). ``shard_rows`` maps
+    shard → [(pid, vector)]. The sharded seeding has no pass B — shards ARE
+    the coarse structure — exactly as the distributed trainer. Pinned
+    bitwise in ``tests/test_kmeans_driver_twin.py``."""
     import numpy as np
-
-    from hierarchical_graph_db_spark.operators.arrow_kernels import (
-        nearest_centroid_batch,
-    )
 
     n_cand = oversample * k
     state = []
@@ -430,8 +382,6 @@ def sharded_train_rows_local(shard_rows: dict, k: int, n_rounds: int,
                       key=lambda r: (_sha_hex(r[0]), r[0]))[:n_cand]
         state.append((shard, _greedy_seeds(
             [(pid, list(v)) for pid, v in pool], k)))
-    if not state:
-        return []
     mats = {
         shard: np.asarray([v for _, v in rows], dtype=np.float64)
         for shard, rows in shard_rows.items()
@@ -439,30 +389,15 @@ def sharded_train_rows_local(shard_rows: dict, k: int, n_rounds: int,
     quanta = {shard: _np_round_half_up_int64(V * 1000000.0)
               for shard, V in mats.items()}
     for _ in range(n_rounds):
-        new_state = []
-        for shard, cents in state:
-            cids, _ = nearest_centroid_batch(cents, mats[shard],
-                                             need_dist=False)
-            by_cid: dict = {}
-            for cid in dict.fromkeys(cids.tolist()):
-                mask = cids == cid
-                s = quanta[shard][mask].sum(axis=0)
-                n = int(mask.sum())
-                by_cid[cid] = [
-                    _round6((float(si) / 1000000.0) / float(n)) for si in s
-                ]
-            new_state.append((shard, sorted(by_cid.items())))
-        state = new_state
-    return [(shard, [(cid, list(c)) for cid, c in cents])
-            for shard, cents in state]
+        state = [(shard, _np_lloyd_round(cents, mats[shard], quanta[shard]))
+                 for shard, cents in state]
+    return state
 
 
 def kmeans_centroid_rows(vectors: DataFrame, id_col: str = "vec_id",
                          vec_col: str = "embedding", k: int = 8,
                          n_rounds: int = 3,
-                         train_sample: int | None = None,
-                         use_arrow: bool = False,
-                         driver_train: bool = True) -> list[tuple]:
+                         train_sample: int | None = None) -> list[tuple]:
     """Driver-side trained centroids [(cid, c)] — the literal form other
     operators (IVF ANN) bake into their plans. With ``train_sample`` the
     quantizer trains on a bounded deterministic sample: the N rows with the
@@ -470,51 +405,27 @@ def kmeans_centroid_rows(vectors: DataFrame, id_col: str = "vec_id",
     TakeOrdered top-N, no shuffle), so training cost is CONSTANT in corpus
     size (round-5 verdict item 3).
 
-    Sampled training runs as ONE Spark job + a driver NumPy replay by
-    default (``driver_train=True`` — :func:`train_rows_local`, bit-identical
-    by the pinned twin recipes): the former per-pass/per-round job cadence
+    Sampled training runs as ONE Spark job + a driver NumPy replay
+    (:func:`train_rows_local`, bit-identical to :func:`_train` over the same
+    N rows by the pinned twin recipes): a per-pass/per-round job cadence
     cost ~6 jobs plus their Catalyst gaps per trained quantizer, ~3-4 s of
-    the measured ann_ivf/ann_pq walls (round-15 profile). The pull is
-    bounded by the ``train_sample`` contract (a constant, corpus-size
-    independent — the k-means‖ paper's own "recluster the candidate pool on
-    one machine" step, widened to the sample). ``driver_train=False`` keeps
-    the fully distributed cadence (the differential-test path; also the
-    escape hatch if a deployment wants zero driver compute)."""
+    the measured ann_ivf/ann_pq walls (round-15 profile). The driver holds
+    at most ``train_sample`` vectors (a constant, corpus-size independent —
+    the k-means‖ paper's own "recluster the candidate pool on one machine"
+    step, widened to the sample); a thin driver passes a smaller
+    ``train_sample``. ``train_sample=None`` trains on the full corpus with
+    the distributed :func:`_train`, whose driver state is the k centroids
+    and the seeding candidate pool."""
     pts = _project(vectors, id_col, vec_col)
-    if train_sample is not None:
-        sample = pts.orderBy(F.sha2(F.col("pid").cast("string"), 256),
-                             F.col("pid")).limit(train_sample)
-        if driver_train:
-            return train_rows_local(_collect_pid_vecs(sample), k, n_rounds)
-        # Distributed cadence: GlobalLimit squeezes the sample into ONE
-        # partition — repartition before checkpointing so the constant
-        # number of training passes keeps the executors busy.
-        par = vectors.sparkSession.sparkContext.defaultParallelism
-        pts = sample.repartition(par).transform(materialize)
-    return _train(pts, k, n_rounds, use_arrow=use_arrow)
-
-
-def kmeans_centroids(vectors: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding", k: int = 8,
-                     n_rounds: int = 3,
-                     train_sample: int | None = None,
-                     use_arrow: bool = False) -> DataFrame:
-    """The trained centroid table (cid, c) as a DataFrame (k local rows).
-    Deterministic and SQL-replayable (see module docstring); ``use_arrow``
-    opts into the bit-identical vectorized assignment kernel
-    (``operators/arrow_kernels`` — r6 verdict item 4)."""
-    rows = kmeans_centroid_rows(vectors, id_col, vec_col, k, n_rounds,
-                                train_sample, use_arrow)
-    schema = StructType([
-        StructField("cid", vectors.schema[id_col].dataType, False),
-        StructField("c", ArrayType(DoubleType()), False),
-    ])
-    return vectors.sparkSession.createDataFrame(rows, schema)
+    if train_sample is None:
+        return _train(pts, k, n_rounds)
+    return train_rows_local(
+        _collect_pid_vecs(_sha_sample(pts, train_sample)), k, n_rounds)
 
 
 def kmeans(vectors: DataFrame, id_col: str = "vec_id",
            vec_col: str = "embedding", k: int = 8,
-           n_rounds: int = 3, use_arrow: bool = False) -> DataFrame:
+           n_rounds: int = 3) -> DataFrame:
     """Cluster ``vectors`` into k groups; returns one row per input vector:
     (id_col, cluster, dist) where ``cluster`` is the seed vector's id and
     ``dist`` the final squared distance to the cluster centroid (6dp).
@@ -522,17 +433,17 @@ def kmeans(vectors: DataFrame, id_col: str = "vec_id",
     Fixed ``n_rounds`` of Lloyd iteration (PageRank-style: the oracle
     replays the same rounds; convergence-to-fixed-point is not the
     contract — centroid quantization makes late rounds cheap no-ops).
-    The final assignment is the same literal-centroid argmin expression the
-    training rounds use: the output plan is scan + project, zero joins,
-    zero exchanges."""
+    The final assignment is the same nearest-centroid kernel the training
+    rounds use: the output plan is scan + project, zero joins, zero
+    exchanges."""
     pts = _project(vectors, id_col, vec_col)
-    cents = _train(pts, k, n_rounds, use_arrow=use_arrow)
+    cents = _train(pts, k, n_rounds)
     if not cents:
         return pts.where(F.lit(False)).select(
             F.col("pid").alias(id_col),
             F.col("pid").alias("cluster"),
             F.lit(0.0).alias("dist"))
-    return _assigned_cid_vec(pts, cents, use_arrow).select(
+    return _assigned_cid_vec(pts, cents).select(
         F.col("pid").alias(id_col),
         F.col("cid").alias("cluster"),
         F.col("d").alias("dist"))
@@ -540,7 +451,7 @@ def kmeans(vectors: DataFrame, id_col: str = "vec_id",
 
 def semantic_dedup(vectors: DataFrame, id_col: str = "vec_id",
                    vec_col: str = "embedding", k: int = 8,
-                   n_rounds: int = 3, use_arrow: bool = False) -> DataFrame:
+                   n_rounds: int = 3) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     method): cluster the embedding corpus, then keep ONE representative per
     semantic cluster — the member closest to its centroid (6dp distance,
@@ -555,7 +466,7 @@ def semantic_dedup(vectors: DataFrame, id_col: str = "vec_id",
     exchange moves O(k) rows, not the corpus (the round-5 verdict's fix for
     the corpus-to-k-reducers keeper window). Deterministic end to end, so
     the SQL oracle replays keeper choice exactly."""
-    assigned = kmeans(vectors, id_col, vec_col, k, n_rounds, use_arrow)
+    assigned = kmeans(vectors, id_col, vec_col, k, n_rounds)
     # min_by under the (dist, id) struct order picks the keeper; its dist is
     # by definition the cluster's min dist — three partial-aggregable
     # aggregates, no window, no sort.
@@ -609,92 +520,38 @@ def _sharded_seed_state(pts: DataFrame, k: int,
             for shard, pool in sorted(pools.items())]
 
 
-def _shard_centroid_df(pts: DataFrame, state: list[tuple]) -> DataFrame:
-    """state [(shard, [(cid, c)])] → a small (shard, cents) DataFrame whose
-    ``cents`` packs the shard's k centroids into one array<struct> column —
-    ONE broadcast-joinable row per shard (n_shards × k × dim doubles
-    total, megabytes for thousands of shards)."""
-    schema = StructType([
-        StructField("shard", pts.schema["shard"].dataType, False),
-        StructField("cents", ArrayType(StructType([
-            StructField("cid", pts.schema["pid"].dataType, False),
-            StructField("c", ArrayType(DoubleType()), False),
-        ])), False),
-    ])
-    rows = [(shard, [(cid, list(c)) for cid, c in cents])
-            for shard, cents in state]
-    return pts.sparkSession.createDataFrame(rows, schema)
-
-
-def _assign_sharded(pts: DataFrame, state: list[tuple],
-                    use_arrow: bool = False) -> DataFrame:
-    """Per-row argmin against the row's OWN shard's centroids: one
-    broadcast hash join on ``shard`` brings the k-centroid array alongside,
-    then the argmin is a pure expression over that column — the corpus
-    never shuffles (the literal-argmin trick, broadcast-keyed so k_total
-    can scale with the shard count instead of living in one expression).
-    ``use_arrow`` flips to the bit-identical vectorized kernel
-    (``arrow_kernels.sharded_assign_udf`` — same rounded-distance/cid total
-    order, the r6 fast-path discipline applied to the sharded argmin)."""
-    if use_arrow:
-        from hierarchical_graph_db_spark.operators.arrow_kernels import (
-            sharded_assign_udf,
-        )
-
-        cid_ddl = pts.schema["pid"].dataType.simpleString()
-        best = sharded_assign_udf(state, cid_ddl)(F.col("shard"), F.col("v"))
-        return pts.select("shard", "pid", "v",
-                          best["cid"].alias("cid"), best["d"].alias("d"))
-    cent_df = _shard_centroid_df(pts, state)
-    scored = F.transform(
-        F.col("cents"),
-        lambda s: F.struct(
-            F.round(_sq_dist(F.col("v"), s["c"]), 6).alias("d"),
-            s["cid"].alias("cid")))
-    best = F.array_sort(scored)[0]
-    return (
-        pts.join(F.broadcast(cent_df), on="shard")
-        .select("shard", "pid", "v",
-                best["cid"].alias("cid"), best["d"].alias("d"))
+def _assign_sharded(pts: DataFrame, state: list[tuple]) -> DataFrame:
+    """Per-row argmin against the row's OWN shard's centroids, through the
+    Arrow kernel ``arrow_kernels.sharded_assign_udf`` (same rounded
+    distance/cid total order as the flat assignment): a pure projection,
+    so the corpus never shuffles and never joins, and k_total scales with
+    the shard count as constants of one UDF."""
+    from hierarchical_graph_db_spark.operators.arrow_kernels import (
+        sharded_assign_udf,
     )
+
+    cid_ddl = pts.schema["pid"].dataType.simpleString()
+    best = sharded_assign_udf(state, cid_ddl)(F.col("shard"), F.col("v"))
+    return pts.select("shard", "pid", "v",
+                      best["cid"].alias("cid"), best["d"].alias("d"))
 
 
 def sharded_kmeans_state(pts: DataFrame, k: int, n_rounds: int,
-                         oversample: int = 8,
-                         use_arrow: bool = False) -> list[tuple]:
+                         oversample: int = 8) -> list[tuple]:
     """Per-shard Lloyd training, every round ONE distributed plan over all
-    shards at once: broadcast-join assignment (no corpus shuffle) + a
-    (shard, cid, pos) fixed-point hash aggregate whose partials collapse
-    map-side — shuffle O(n_shards × k × dim) cells regardless of corpus
-    size. Centroid state lives driver-side between rounds (bounded:
-    n_shards × k × dim; stores with very large shard counts would keep it
-    in a table and swap the broadcast join's small side accordingly)."""
+    shards at once: the Arrow per-shard assignment (no corpus shuffle) + a
+    (shard, cid, pos) :func:`_centroid_update` — shuffle O(n_shards × k ×
+    dim) cells regardless of corpus size. Centroid state lives driver-side
+    between rounds (bounded: n_shards × k × dim)."""
     state = _sharded_seed_state(pts, k, oversample)
     if not state:
         return []
     for _ in range(n_rounds):
-        assigned = _assign_sharded(pts, state, use_arrow)
-        upd = (
-            assigned.select("shard", "cid", "v")
-            .select("shard", "cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("shard", "cid", "pos")
-            .agg(F.sum(F.round(F.col("x") * 1000000).cast("bigint"))
-                 .alias("s"),
-                 F.count(F.lit(1)).alias("n"))
-            .select("shard", "cid", "pos",
-                    F.round((F.col("s") / F.lit(1000000.0)) / F.col("n"), 6)
-                    .alias("c"))
-            .collect()
-        )
         by_shard: dict = {}
-        for r in upd:
-            by_shard.setdefault(r["shard"], {}).setdefault(
-                r["cid"], {})[r["pos"]] = r["c"]
-        state = [
-            (shard, [(cid, [comp[p] for p in sorted(comp)])
-                     for cid, comp in sorted(by_cid.items())])
-            for shard, by_cid in sorted(by_shard.items())
-        ]
+        upd = _centroid_update(_assign_sharded(pts, state), ["shard"])
+        for (shard, cid), c in upd.items():
+            by_shard.setdefault(shard, []).append((cid, c))
+        state = list(by_shard.items())
     return state
 
 
@@ -702,26 +559,25 @@ def semantic_dedup_sharded(vectors: DataFrame, id_col: str = "vec_id",
                            vec_col: str = "embedding",
                            shard_col: str = "label", k: int = 2,
                            n_rounds: int = 2,
-                           oversample: int = 8,
-                           use_arrow: bool = False) -> DataFrame:
+                           oversample: int = 8) -> DataFrame:
     """SemDeDup run independently per shard (language / topic / hash
     bucket) in one plan — the production shape the flat :func:`semantic_dedup`
     docstring promised: k_total = k × n_shards grows with the corpus while
-    every stage stays broadcast-joined or partial-aggregated (no giant
-    single centroid broadcast, no corpus shuffle). Returns one keeper row
+    every stage stays a projection or a partial aggregate (no giant single
+    centroid broadcast, no corpus shuffle). Returns one keeper row
     per (shard, cluster): (shard, cluster, keeper_id, n_members,
     keeper_dist) with the same deterministic (dist, id) keeper order as the
     flat operator. Abbas et al. 2023 (public method), sharded per its §4
     scale recipe."""
     pts = _sharded_project(vectors, shard_col, id_col, vec_col)
-    state = sharded_kmeans_state(pts, k, n_rounds, oversample, use_arrow)
+    state = sharded_kmeans_state(pts, k, n_rounds, oversample)
     if not state:
         return pts.where(F.lit(False)).select(
             F.col("shard"), F.col("pid").alias("cluster"),
             F.col("pid").alias("keeper_id"),
             F.lit(0).cast("long").alias("n_members"),
             F.lit(0.0).alias("keeper_dist"))
-    assigned = _assign_sharded(pts, state, use_arrow)
+    assigned = _assign_sharded(pts, state)
     order_key = F.struct(F.col("d"), F.col("pid"))
     return (
         assigned.groupBy("shard", F.col("cid").alias("cluster"))

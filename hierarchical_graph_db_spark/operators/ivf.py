@@ -5,8 +5,8 @@ Architecture (classic IVF-Flat):
 
 1. **train** — the engine's own deterministic k-means
    (``operators/clustering.py`` — oversampled seeding, fixed-point centroid
-   sums, SQL-replayable) learns ``n_lists`` coarse centroids over the
-   corpus; an MLlib-backed trainer is kept as an alternative;
+   sums, SQL-replayable) learns ``n_lists`` coarse centroids over a
+   bounded deterministic sample of the corpus;
 2. **index** — every corpus vector is assigned to its nearest centroid (the
    inverted list); at 100 TB the corpus is *written partitioned/bucketed by
    list id* so a probe reads only its lists' files;
@@ -14,9 +14,11 @@ Architecture (classic IVF-Flat):
    ``nprobe`` nearest lists, and scores only those lists' vectors:
    |corpus|·nprobe/n_lists candidates instead of |corpus|.
 
-Probe selection runs as Catalyst expressions over centroid literals (the
-trained centers are small enough to bake into the plan — the same trick the
-LSH hyperplanes use); candidate scoring reuses the unrolled cosine kernel.
+The trained centers are small enough to bake into the plan (the same trick
+the LSH hyperplanes use): corpus-side list assignment runs the Arrow
+nearest-centroid kernel (``operators/arrow_kernels.list_id_udf``), query-side
+probe selection Catalyst expressions over centroid literals; candidate
+scoring reuses the unrolled cosine kernel.
 """
 
 from __future__ import annotations
@@ -31,20 +33,6 @@ from hierarchical_graph_db_spark.functions.vectors import (
 )
 
 
-def train_centroids(corpus: DataFrame, n_lists: int = 10,
-                    vec_col: str = "embedding", seed: int = 42) -> list[list[float]]:
-    """MLlib KMeans coarse quantizer; returns centers as plain lists (plan
-    literals). Alternative trainer — not oracle-replayable (MLlib's
-    initialization is engine-private); the default query path uses
-    :func:`deterministic_centroids`."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_lists, seed=seed, maxIter=20).fit(feats)
-    return [c.tolist() for c in model.clusterCenters()]
-
-
 TRAIN_SAMPLE = 10_000
 
 
@@ -52,24 +40,24 @@ def deterministic_centroids(corpus: DataFrame, n_lists: int = 10,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding",
                             n_rounds: int = 2,
-                            train_sample: int = TRAIN_SAMPLE,
-                            use_arrow: bool = False) -> list[list[float]]:
+                            train_sample: int = TRAIN_SAMPLE
+                            ) -> list[list[float]]:
     """Coarse quantizer trained with the engine's deterministic k-means
     (``operators/clustering.kmeans_centroid_rows``): no RNG, 6dp-quantized
     state, so a SQL oracle can replay the exact same centers. Trains on a
     bounded deterministic sample (smallest-``sha256(pid)`` top-N — round-5
     verdict item 3), so training cost is CONSTANT in corpus size; a coarse
-    quantizer needs a representative sample, not the corpus. Returned
-    ordered by seed id — list i is centroid i in :func:`assign_lists` /
-    :func:`ivf_topk`."""
+    quantizer needs a representative sample, not the corpus. The driver
+    holds at most ``train_sample`` vectors while training; a thin driver
+    passes a smaller ``train_sample``. Returned ordered by seed id — list i
+    is centroid i in :func:`assign_lists` / :func:`ivf_topk`."""
     from hierarchical_graph_db_spark.operators.clustering import (
         kmeans_centroid_rows,
     )
 
     rows = kmeans_centroid_rows(corpus, id_col=id_col, vec_col=vec_col,
                                 k=n_lists, n_rounds=n_rounds,
-                                train_sample=train_sample,
-                                use_arrow=use_arrow)
+                                train_sample=train_sample)
     return [c for _, c in sorted(rows, key=lambda r: r[0])]
 
 
@@ -89,30 +77,19 @@ def _sq_dist(vec, center: list[float]):
 
 
 def assign_lists(df: DataFrame, centers: list[list[float]],
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 use_arrow: bool = False) -> DataFrame:
-    """Index step: nearest-centroid id per vector (argmin over unrolled
-    distances). Output: (id, list_id, vec, norm) — what gets written
-    bucketed by list_id at scale. ``use_arrow`` flips the per-row rounded
-    argmin to the bit-identical vectorized kernel
-    (``operators/arrow_kernels.list_id_udf`` — r6 verdict item 4); the
-    default stays on the pure expression so the oracle replay holds."""
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
+    """Index step: nearest-centroid id per vector, through the vectorized
+    kernel ``operators/arrow_kernels.list_id_udf``. Output: (id, list_id,
+    vec, norm) — what gets written bucketed by list_id at scale."""
     # Distances rounded to 6dp before the argmin (ties → lowest list id):
     # the same quantize-then-compare discipline as operators/clustering.py,
     # which is what lets a SQL oracle replay the assignment bit-for-bit.
-    if use_arrow:
-        from hierarchical_graph_db_spark.operators.arrow_kernels import (
-            list_id_udf,
-        )
+    from hierarchical_graph_db_spark.operators.arrow_kernels import (
+        list_id_udf,
+    )
 
-        list_id = list_id_udf(centers)(F.col(vec_col))
-    else:
-        dists = F.array(*[
-            F.struct(F.round(_sq_dist(F.col(vec_col), c), 6).alias("d"),
-                     F.lit(i).alias("i"))
-            for i, c in enumerate(centers)
-        ])
-        list_id = F.array_sort(dists)[0]["i"]
+    list_id = list_id_udf(centers)(F.col(vec_col))
     return df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
@@ -129,17 +106,15 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Search step: probe the ``nprobe`` nearest lists per query, exact
-    cosine inside them, top-k per query. ``use_arrow`` vectorizes the
-    corpus-side list assignment (the measured hot loop — |corpus| × n_lists
-    interpreted folds); the query-side probe ranking stays on expressions
-    (|queries| rows, negligible)."""
+    cosine inside them, top-k per query. The corpus-side list assignment
+    is :func:`assign_lists`; the query-side probe ranking runs on
+    expressions (|queries| rows, negligible)."""
     from pyspark.sql.window import Window
 
     dim = len(centers[0])
-    indexed = assign_lists(corpus, centers, id_col, vec_col, use_arrow)
+    indexed = assign_lists(corpus, centers, id_col, vec_col)
 
     dists = F.array(*[
         F.struct(F.round(_sq_dist(F.col(vec_col), c), 6).alias("d"),

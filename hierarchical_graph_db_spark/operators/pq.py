@@ -14,15 +14,16 @@ table lookups.
 
 Spark-first shape:
 
-* **train** — one call to the engine's sharded deterministic k-means
-  (``operators/clustering.sharded_kmeans_state``) with *shard = subspace*:
-  every subspace's codebook trains concurrently in the SAME distributed
-  plan (broadcast-join assignment, shard-keyed fixed-point centroid
-  aggregates), on a bounded smallest-``sha256(pid)`` sample — training cost
-  constant in corpus size, like IVF's quantizer;
+* **train** — the engine's sharded deterministic k-means with *shard =
+  subspace*: every subspace's codebook trains concurrently, on a bounded
+  smallest-``sha256(pid)`` sample replayed on the driver
+  (``operators/clustering.sharded_train_rows_local``) — training cost
+  constant in corpus size, like IVF's quantizer — or, without a sample,
+  in ONE distributed plan per round over the whole corpus
+  (``operators/clustering.sharded_kmeans_state``: Arrow per-shard
+  assignment, shard-keyed fixed-point centroid aggregates);
 * **encode** — per-row argmin per subspace over the codebook literals
-  (zip_with over two literal arrays — no join, no shuffle; the clustering
-  module's literal-argmin trick per subspace);
+  (zip_with over two literal arrays — no join, no shuffle);
 * **search** — the tiny query side carries its m×ksub ADC tables as an
   expression-computed column and broadcasts; the corpus side streams codes
   only. Scoring is m array lookups + a fixed-order sum per candidate.
@@ -44,8 +45,6 @@ from hierarchical_graph_db_spark.functions.fastlit import (
     lit_double_matrix,
     lit_index_array,
 )
-from hierarchical_graph_db_spark.materialize import materialize
-
 from hierarchical_graph_db_spark.operators.clustering import (
     _sq_dist,
     sharded_kmeans_state,
@@ -66,9 +65,8 @@ def pq_codebooks(corpus: DataFrame, dim: int, m: int = M_SUBSPACES,
                  ksub: int = KSUB, id_col: str = "vec_id",
                  vec_col: str = "embedding", n_rounds: int = PQ_ROUNDS,
                  oversample: int = PQ_OVERSAMPLE,
-                 train_sample: int | None = TRAIN_SAMPLE,
-                 use_arrow: bool = False,
-                 driver_train: bool = True) -> list[list[list[float]]]:
+                 train_sample: int | None = TRAIN_SAMPLE
+                 ) -> list[list[list[float]]]:
     """``books[s][j]`` = codeword j of subspace s, trained as ONE sharded
     k-means run over the exploded (subspace, pid, subvector) rows — all m
     codebooks learn concurrently; no per-subspace job trains alone. The
@@ -76,57 +74,46 @@ def pq_codebooks(corpus: DataFrame, dim: int, m: int = M_SUBSPACES,
     Codewords are ordered by seed id, so code j is reproducible
     cross-engine (the IVF centroid-ordering trick).
 
-    Sampled training defaults to ONE Spark job + a driver NumPy replay
-    (``driver_train=True`` — ``clustering.sharded_train_rows_local``,
-    bit-identical by the pinned twin recipes; the subvector slices are the
-    same elements ``F.slice`` selects). The former cadence paid a sample
-    materialize plus per-round plan/collect gaps, ~2 s of the measured
-    ann_pq wall. ``driver_train=False`` keeps the fully distributed path
-    (differential tests; zero-driver-compute deployments)."""
-    dsub = dim // m
-    pts = corpus.select(
-        F.col(id_col).alias("pid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+    Sampled training runs as ONE Spark job + a driver NumPy replay
+    (``clustering.sharded_train_rows_local``, bit-identical to
+    ``sharded_kmeans_state`` over the same rows by the pinned twin recipes;
+    the subvector slices are the same elements ``F.slice`` selects). The
+    driver holds at most ``train_sample`` vectors; a thin driver passes a
+    smaller ``train_sample``. ``train_sample=None`` trains on the full
+    corpus with the distributed ``sharded_kmeans_state``."""
+    from hierarchical_graph_db_spark.operators.clustering import (
+        _collect_pid_vecs,
+        _project,
+        _sha_sample,
+        sharded_train_rows_local,
     )
-    if train_sample is not None:
-        sample = pts.orderBy(F.sha2(F.col("pid").cast("string"), 256),
-                             F.col("pid")).limit(train_sample)
-        if driver_train:
-            from hierarchical_graph_db_spark.operators.clustering import (
-                _collect_pid_vecs,
-                sharded_train_rows_local,
-            )
 
-            rows = _collect_pid_vecs(sample)
-            shard_rows = {
-                s: [(pid, v[s * dsub:(s + 1) * dsub]) for pid, v in rows]
-                for s in range(m)
-            }
-            state = sharded_train_rows_local(shard_rows, k=ksub,
-                                             n_rounds=n_rounds,
-                                             oversample=oversample)
-            by_shard = dict(state)
-            return [
-                [c for _, c in sorted(by_shard.get(s, []),
-                                      key=lambda r: r[0])]
-                for s in range(m)
-            ]
-        par = corpus.sparkSession.sparkContext.defaultParallelism
-        pts = sample.repartition(par).transform(materialize)
-    sub = (
-        pts.select(
-            "pid",
-            F.explode(F.array(*[
-                F.struct(F.lit(s).alias("shard"),
-                         _subvec(F.col("v"), s, dsub).alias("sv"))
-                for s in range(m)
-            ])).alias("e"),
+    dsub = dim // m
+    pts = _project(corpus, id_col, vec_col)
+    if train_sample is not None:
+        rows = _collect_pid_vecs(_sha_sample(pts, train_sample))
+        shard_rows = {
+            s: [(pid, v[s * dsub:(s + 1) * dsub]) for pid, v in rows]
+            for s in range(m)
+        }
+        state = sharded_train_rows_local(shard_rows, k=ksub,
+                                         n_rounds=n_rounds,
+                                         oversample=oversample)
+    else:
+        sub = (
+            pts.select(
+                "pid",
+                F.explode(F.array(*[
+                    F.struct(F.lit(s).alias("shard"),
+                             _subvec(F.col("v"), s, dsub).alias("sv"))
+                    for s in range(m)
+                ])).alias("e"),
+            )
+            .select(F.col("e.shard").alias("shard"), "pid",
+                    F.col("e.sv").alias("v"))
         )
-        .select(F.col("e.shard").alias("shard"), "pid",
-                F.col("e.sv").alias("v"))
-    )
-    state = sharded_kmeans_state(sub, k=ksub, n_rounds=n_rounds,
-                                 oversample=oversample, use_arrow=use_arrow)
+        state = sharded_kmeans_state(sub, k=ksub, n_rounds=n_rounds,
+                                     oversample=oversample)
     by_shard = dict(state)
     return [
         [c for _, c in sorted(by_shard.get(s, []), key=lambda r: r[0])]

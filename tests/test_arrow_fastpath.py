@@ -1,14 +1,14 @@
-"""Arrow fast-path parity (r6 verdict item 4): the vectorized
-nearest-centroid kernel must be BIT-IDENTICAL to the default
-literal-argmin expression — same cluster ids, same 6dp distances, same
-trained centroids — on the real fixture and on adversarial rounding ties.
-The default path stays the oracle-replayable one; ``use_arrow=True`` is
-the documented cluster-scale flip (PLANS.md round-6 notes)."""
+"""Arrow nearest-centroid kernel parity: the vectorized kernel must be
+BIT-IDENTICAL to the sequential-fold distance and the (6dp distance, id)
+total order the SQL oracle replays — on adversarial rounding ties, on
+exact centroid copies and against the Catalyst fold expression. The
+registry queries built on it are checked end to end against the DuckDB
+oracle in ``tests/test_quantizer_oracle.py``."""
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
+import pytest
 
 from hierarchical_graph_db_spark.operators.arrow_kernels import (
     nearest_centroid_batch,
@@ -16,53 +16,16 @@ from hierarchical_graph_db_spark.operators.arrow_kernels import (
 from hierarchical_graph_db_spark.operators.clustering import (
     _py_sq_dist,
     _round6,
-    kmeans,
-    kmeans_centroid_rows,
 )
 from hierarchical_graph_db_spark.operators.ivf import (
     assign_lists,
     deterministic_centroids,
-    ivf_topk,
 )
 from tests.conftest import SF_SMALL
 
 
 def _emb(spark):
     return spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-
-
-def test_kmeans_arrow_matches_default(spark):
-    emb = _emb(spark)
-    slow = sorted(tuple(r) for r in kmeans(emb, k=4, n_rounds=2).collect())
-    fast = sorted(tuple(r) for r in
-                  kmeans(emb, k=4, n_rounds=2, use_arrow=True).collect())
-    assert slow == fast  # ids, clusters AND 6dp distances, bit-for-bit
-
-
-def test_kmeans_centroid_rows_arrow_matches_default(spark):
-    emb = _emb(spark)
-    slow = kmeans_centroid_rows(emb, k=3, n_rounds=2, train_sample=100)
-    fast = kmeans_centroid_rows(emb, k=3, n_rounds=2, train_sample=100,
-                                use_arrow=True)
-    assert slow == fast  # trained state identical → every round agreed
-
-
-def test_ivf_arrow_matches_default(spark):
-    emb = _emb(spark)
-    centers = deterministic_centroids(emb, n_lists=4, n_rounds=2,
-                                      train_sample=200)
-    slow = sorted(tuple(r) for r in
-                  assign_lists(emb, centers).collect())
-    fast = sorted(tuple(r) for r in
-                  assign_lists(emb, centers, use_arrow=True).collect())
-    assert [(r[0], r[3]) for r in slow] == [(r[0], r[3]) for r in fast]
-    q = emb.limit(5)
-    s_top = sorted(tuple(r) for r in
-                   ivf_topk(q, emb, centers, k=3, nprobe=2).collect())
-    f_top = sorted(tuple(r) for r in
-                   ivf_topk(q, emb, centers, k=3, nprobe=2,
-                            use_arrow=True).collect())
-    assert s_top == f_top
 
 
 def test_arrow_kernel_rounding_ties(spark):
@@ -101,43 +64,10 @@ def test_arrow_plan_is_arrow_eval(spark):
     emb = _emb(spark)
     centers = deterministic_centroids(emb, n_lists=3, n_rounds=1,
                                       train_sample=100)
-    plan = assign_lists(emb, centers, use_arrow=True)._jdf.queryExecution() \
+    plan = assign_lists(emb, centers)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
-
-
-def test_seed_rows_arrow_matches_default(spark):
-    from hierarchical_graph_db_spark.operators.clustering import (
-        _project, _seed_rows,
-    )
-
-    pts = _project(_emb(spark), "vec_id", "embedding")
-    slow = _seed_rows(pts, 4, 8, use_arrow=False)
-    fast = _seed_rows(pts, 4, 8, use_arrow=True)
-    assert slow == fast  # pass-B min-dists bit-identical → same candidates
-
-
-def test_sharded_assign_arrow_matches_default(spark):
-    from hierarchical_graph_db_spark.operators.clustering import (
-        semantic_dedup_sharded,
-    )
-
-    emb = _emb(spark)
-    slow = sorted(tuple(r) for r in
-                  semantic_dedup_sharded(emb, use_arrow=False).collect())
-    fast = sorted(tuple(r) for r in
-                  semantic_dedup_sharded(emb, use_arrow=True).collect())
-    assert slow == fast  # per-shard argmin + 6dp dists, bit-for-bit
-
-
-def test_pq_codebooks_arrow_matches_default(spark):
-    from hierarchical_graph_db_spark.operators.pq import pq_codebooks
-
-    emb = _emb(spark)
-    slow = pq_codebooks(emb, dim=64, use_arrow=False)
-    fast = pq_codebooks(emb, dim=64, use_arrow=True)
-    assert slow == fast  # every subspace codebook identical
 
 
 def test_pool_min_dist_matches_expression(spark):
@@ -167,3 +97,51 @@ def test_pool_min_dist_matches_expression(spark):
     fast = {r["pid"]: r["m"] for r in df.select(
         "pid", pool_min_dist_udf(pool)(F.col("v")).alias("m")).collect()}
     assert slow == fast
+
+
+def _sharded_assign(spark, state, rows):
+    from pyspark.sql import functions as F
+
+    from hierarchical_graph_db_spark.operators.arrow_kernels import (
+        sharded_assign_udf,
+    )
+
+    best = sharded_assign_udf(state, "bigint")(F.col("shard"), F.col("v"))
+    frame = spark.createDataFrame(rows, "shard: string, v: array<double>")
+    return frame.select(
+        "shard", "v", best["cid"].alias("cid"), best["d"].alias("d"))
+
+
+def test_sharded_assign_copy_tie_smaller_cid_wins(spark):
+    """Each row is scored against its OWN shard's centroids only. In shard
+    "a" centroid 9 is an exact copy of centroid 4, listed first, so every
+    row of that shard ties on the rounded distance and the smaller cid (4)
+    must win; each (cid, 6dp distance) equals the driver fold twin's
+    lexicographic min, and no row is dropped."""
+    rng = np.random.default_rng(11)
+    a = [list(map(float, c)) for c in rng.standard_normal((2, 6))]
+    b = [list(map(float, c)) for c in rng.standard_normal((3, 6))]
+    state = [("a", [(9, a[0]), (4, a[0]), (7, a[1])]),
+             ("b", [(1, b[0]), (2, b[1]), (3, b[2])])]
+    rows = [("a" if i % 3 else "b", list(map(float, v)))
+            for i, v in enumerate(rng.standard_normal((40, 6)))]
+    rows += [("a", list(a[0])), ("b", list(b[2]))]  # distance-0 rows
+    out = _sharded_assign(spark, state, rows).collect()
+    assert len(out) == len(rows)
+    cents = dict(state)
+    for r in out:
+        want = min((_round6(_py_sq_dist(list(r["v"]), c)), cid)
+                   for cid, c in cents[r["shard"]])
+        assert (r["d"], r["cid"]) == want
+        assert r["cid"] != 9
+    assert {r["cid"] for r in out if r["shard"] == "a"} <= {4, 7}
+    assert {r["cid"] for r in out if r["shard"] == "b"} <= {1, 2, 3}
+
+
+def test_sharded_assign_missing_shard_raises(spark):
+    """A row whose shard has no centroids in ``state`` must fail the
+    query, never come back silently dropped or unassigned."""
+    state = [("a", [(1, [0.0, 0.0]), (2, [1.0, 1.0])])]
+    rows = [("a", [0.1, 0.0]), ("z", [0.9, 1.0]), ("a", [1.0, 0.9])]
+    with pytest.raises(Exception, match="KeyError"):
+        _sharded_assign(spark, state, rows).collect()

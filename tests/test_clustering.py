@@ -62,9 +62,9 @@ def test_semantic_dedup_keeps_one_per_blob(spark):
 
 def test_kmeans_assignment_is_pure_projection(spark):
     """The corpus must never shuffle for assignment: the trained centroids
-    are plan literals and the argmin a per-row expression, so the final
-    assignment plan is scan + project — NO join, NO exchange of any kind
-    (the 100 TB contract, tightened from round 4's broadcast-join shape)."""
+    are constants of the per-row Arrow kernel, so the final assignment
+    plan is scan + project — NO join, NO exchange of any kind (the 100 TB
+    contract, tightened from round 4's broadcast-join shape)."""
     plan = (
         kmeans(_blobs(spark), k=3, n_rounds=1)
         ._jdf.queryExecution().executedPlan().toString()
@@ -101,24 +101,30 @@ def test_semantic_dedup_keeper_is_partial_aggregate(spark):
 
 def test_seeding_constant_corpus_work_independent_of_k(spark):
     """Oversampled seeding does its corpus work in the two candidate
-    passes; the returned seed table is a driver-materialized local relation
-    (the greedy refinement ran on the candidate pool, not the corpus), so
-    its plan carries NO corpus lineage — downstream rounds re-broadcast k
-    local rows however large k grows."""
-    from pyspark.sql import functions as F
-
+    passes, whatever k is: the k-center greedy runs driver-side over the
+    ≤2L candidate pool, never the corpus. So ``_seed_rows`` runs the same
+    number of Spark jobs at k=3 and k=8, returns k distinct corpus points,
+    and at k=3 puts one seed in each separated blob."""
     from hierarchical_graph_db_spark.operators.clustering import (
-        oversampled_seeds,
+        _project,
+        _seed_rows,
     )
 
-    pts = _blobs(spark).select(
-        F.col("vec_id").alias("pid"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    seeds = oversampled_seeds(pts, k=5)
-    assert seeds.count() == 5
-    plan = seeds._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
-    assert "Join" not in plan and "Exchange" not in plan
+    pts = _project(_blobs(spark), "vec_id", "embedding")
+    sc = spark.sparkContext
+    jobs, seeds = {}, {}
+    for k in (3, 8):
+        group = f"seed-rows-k{k}"
+        sc.setJobGroup(group, group)
+        try:
+            seeds[k] = _seed_rows(pts, k)
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[3] == jobs[8] > 0
+    for k, rows in seeds.items():
+        assert len({pid for pid, _ in rows}) == len(rows) == k
+    assert {pid // 30 for pid, _ in seeds[3]} == {0, 1, 2}
 
 
 def test_semantic_dedup_sharded_blobs(spark):
@@ -152,8 +158,7 @@ def test_semantic_dedup_sharded_plan_shape(spark, sf_dir):
     (one ArrowEvalPython projection — no join at all, so no corpus shuffle
     by construction), and the keeper pass partial-aggregates below its
     exchange — no cartesian, no sort-merge join, no window over the corpus
-    output path. The expression path (use_arrow=False) keeps the
-    broadcast-hash-join assignment — pinned separately below."""
+    output path."""
     from hierarchical_graph_db_spark.queries import load
 
     plan = (
@@ -165,22 +170,3 @@ def test_semantic_dedup_sharded_plan_shape(spark, sf_dir):
     assert "ArrowEvalPython" in plan
     assert "partial_min_by" in plan
     assert plan.index("partial_min_by") > plan.index("Exchange")
-
-
-def test_semantic_dedup_sharded_expression_path_plan_shape(spark, sf_dir):
-    """The oracle-replayable expression path's only join is the broadcast
-    hash join on shard (assignment) — the corpus is never shuffled."""
-    from hierarchical_graph_db_spark.io import Catalog
-    from hierarchical_graph_db_spark.operators.clustering import (
-        semantic_dedup_sharded,
-    )
-
-    emb = Catalog(spark, sf_dir).embeddings
-    plan = (
-        semantic_dedup_sharded(emb, use_arrow=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "partial_min_by" in plan

@@ -1,13 +1,16 @@
-"""Differential pins for the round-15 driver-twin sampled trainers:
-``kmeans_centroid_rows(driver_train=True)`` and
-``pq_codebooks(driver_train=True)`` must be BIT-identical to the fully
-distributed cadence (``driver_train=False``) — the same discipline as the
-graph hybrid finishes' ``small_cutoff=0`` differentials (round 14).
+"""Differential pins for the driver-twin sampled trainers:
+``kmeans_centroid_rows(df, train_sample=N)`` and
+``pq_codebooks(df, train_sample=N)`` pull the N rows with the smallest
+``(sha256(pid), pid)`` and replay seeding and every Lloyd round in NumPy on
+the driver. They must be BIT-identical to the distributed trainers
+(``clustering._train`` / ``clustering.sharded_kmeans_state``) run over
+exactly those N rows, i.e. the same call with ``train_sample=None`` on the
+top-N frame — the same discipline as the graph hybrid finishes'
+``small_cutoff=0`` differentials.
 
-Covers both the use_arrow and pure-expression distributed paths (they are
-themselves pinned equal by test_arrow_fastpath), fixture data and an
-adversarial random corpus (negative components, near-tie distances, a
-sample smaller than / equal to / larger than the corpus).
+Covers fixture data and an adversarial random corpus (negative
+components, near-tie distances, a sample smaller than / equal to / larger
+than the corpus).
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ import random
 import struct
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -49,6 +53,12 @@ def _random_corpus(spark, n: int, dim: int, seed: int):
     return spark.createDataFrame(rows, SCHEMA)
 
 
+def _top_n(df, n: int):
+    """The rows a ``train_sample=n`` trainer pulls, as a Spark frame."""
+    return df.orderBy(F.sha2(F.col("vec_id").cast("string"), 256),
+                      F.col("vec_id")).limit(n)
+
+
 @pytest.mark.parametrize("n,train_sample,k,n_rounds", [
     (400, 100, 7, 2),    # sample < corpus: pass B binds
     (120, 200, 5, 3),    # sample > corpus: pass B empty on the remainder
@@ -57,12 +67,10 @@ def _random_corpus(spark, n: int, dim: int, seed: int):
 def test_kmeans_twin_random(spark, n, train_sample, k, n_rounds):
     df = _random_corpus(spark, n, 16, seed=n)
     twin = kmeans_centroid_rows(df, k=k, n_rounds=n_rounds,
-                                train_sample=train_sample, driver_train=True)
-    for use_arrow in (False, True):
-        dist = kmeans_centroid_rows(df, k=k, n_rounds=n_rounds,
-                                    train_sample=train_sample,
-                                    use_arrow=use_arrow, driver_train=False)
-        assert _bits_rows(twin) == _bits_rows(dist)
+                                train_sample=train_sample)
+    dist = kmeans_centroid_rows(_top_n(df, train_sample), k=k,
+                                n_rounds=n_rounds, train_sample=None)
+    assert _bits_rows(twin) == _bits_rows(dist)
 
 
 @pytest.mark.parametrize("m,ksub,n_rounds,oversample", [
@@ -71,24 +79,20 @@ def test_kmeans_twin_random(spark, n, train_sample, k, n_rounds):
 ])
 def test_pq_twin_random(spark, m, ksub, n_rounds, oversample):
     df = _random_corpus(spark, 300, 16, seed=m * 100 + ksub)
-    twin = pq_codebooks(df, dim=16, m=m, ksub=ksub, n_rounds=n_rounds,
-                        oversample=oversample, train_sample=128,
-                        driver_train=True)
-    for use_arrow in (False, True):
-        dist = pq_codebooks(df, dim=16, m=m, ksub=ksub, n_rounds=n_rounds,
-                            oversample=oversample, train_sample=128,
-                            use_arrow=use_arrow, driver_train=False)
-        assert _bits_books(twin) == _bits_books(dist)
+    kw = dict(dim=16, m=m, ksub=ksub, n_rounds=n_rounds,
+              oversample=oversample)
+    twin = pq_codebooks(df, train_sample=128, **kw)
+    dist = pq_codebooks(_top_n(df, 128), train_sample=None, **kw)
+    assert _bits_books(twin) == _bits_books(dist)
 
 
 def test_kmeans_twin_fixture(spark, sf_dir):
     from hierarchical_graph_db_spark.io import Catalog
 
     emb = Catalog(spark, sf_dir).embeddings
-    twin = kmeans_centroid_rows(emb, k=10, n_rounds=2, train_sample=10_000,
-                                driver_train=True)
-    dist = kmeans_centroid_rows(emb, k=10, n_rounds=2, train_sample=10_000,
-                                use_arrow=True, driver_train=False)
+    twin = kmeans_centroid_rows(emb, k=10, n_rounds=2, train_sample=10_000)
+    dist = kmeans_centroid_rows(_top_n(emb, 10_000), k=10, n_rounds=2,
+                                train_sample=None)
     assert _bits_rows(twin) == _bits_rows(dist)
 
 
@@ -96,8 +100,7 @@ def test_pq_twin_fixture(spark, sf_dir):
     from hierarchical_graph_db_spark.io import Catalog
 
     emb = Catalog(spark, sf_dir).embeddings
-    twin = pq_codebooks(emb, dim=64, m=4, ksub=8, n_rounds=2, oversample=4,
-                        driver_train=True)
-    dist = pq_codebooks(emb, dim=64, m=4, ksub=8, n_rounds=2, oversample=4,
-                        use_arrow=True, driver_train=False)
+    kw = dict(dim=64, m=4, ksub=8, n_rounds=2, oversample=4)
+    twin = pq_codebooks(emb, **kw)
+    dist = pq_codebooks(_top_n(emb, 10_000), train_sample=None, **kw)
     assert _bits_books(twin) == _bits_books(dist)

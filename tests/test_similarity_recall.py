@@ -65,12 +65,15 @@ def test_lsh_recall_vs_bruteforce(spark):
 def test_ivf_recall_vs_bruteforce(spark):
     """IVF-Flat with n_lists=8, nprobe=2 on the 8 true clusters: a query's
     own cluster is always probed, so recall should be near-perfect."""
-    from hierarchical_graph_db_spark.operators.ivf import ivf_topk, train_centroids
+    from hierarchical_graph_db_spark.operators.ivf import (
+        deterministic_centroids,
+        ivf_topk,
+    )
 
     rows = _clustered_vectors()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = df.where("vec_id % 12 = 0")
-    centers = train_centroids(df, n_lists=8, seed=7)
+    centers = deterministic_centroids(df, n_lists=8)
     exact = brute_force_topk(queries, df, k=K, dim=DIM)
     approx = ivf_topk(queries, df, centers, k=K, nprobe=2)
 

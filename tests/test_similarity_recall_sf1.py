@@ -71,8 +71,7 @@ def test_ivf_recall_at_sf1_scale(emb_sf1):
     queries = emb_sf1.where(f"vec_id % {N_VECS // N_QUERIES} = 0")
     centers = deterministic_centroids(emb_sf1, n_lists=10, n_rounds=2)
     exact = brute_force_topk(queries, emb_sf1, k=K, dim=DIM)
-    approx = ivf_topk(queries, emb_sf1, centers, k=K, nprobe=2,
-                      use_arrow=True)
+    approx = ivf_topk(queries, emb_sf1, centers, k=K, nprobe=2)
     mean, per_q = _mean_recall(exact, approx)
     assert mean >= 0.9, f"IVF mean recall {mean:.3f} at sf1 scale: {per_q}"
 
