@@ -376,6 +376,8 @@ def sharded_train_rows_local(shard_rows: dict, k: int, n_rounds: int,
     import numpy as np
 
     n_cand = oversample * k
+    # a shard with no rows gets no state, as in the distributed trainer
+    shard_rows = {s: rows for s, rows in shard_rows.items() if rows}
     state = []
     for shard in sorted(shard_rows):
         pool = sorted(shard_rows[shard],

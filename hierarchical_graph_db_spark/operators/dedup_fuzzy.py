@@ -865,7 +865,7 @@ def sorted_neighborhood_pairs(docs: DataFrame, window: int = 4,
 #: ``plan="auto"`` in :func:`prefix_filter_jaccard_pairs` picks the prefix
 #: filter only when the shingle df distribution is head-heavy enough for
 #: prefix pruning to beat the plain inverted index. Decision statistic
-#: (measured round 11, tools/prefix_crossover_probe.py → PLANS.md
+#: (measured round 11, CROSSOVER_r11.json → PLANS.md
 #: §Round-11): the HOT SHARE of the join volume,
 #: ``Σ_{df > HOT_DF} df² / Σ df²`` — the fraction of the inverted-index
 #: self-join's matched rows that hot shingles would carry. That is

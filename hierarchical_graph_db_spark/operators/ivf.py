@@ -113,6 +113,14 @@ def ivf_topk(
     expressions (|queries| rows, negligible)."""
     from pyspark.sql.window import Window
 
+    if not centers:  # empty corpus: no lists to probe
+        nid = corpus.schema[id_col]
+        return queries.where(F.lit(False)).select(
+            F.col(id_col).alias("query_id"),
+            F.lit(None if nid.nullable else 0).cast(nid.dataType)
+            .alias("neighbor_id"),
+            F.lit(None).cast("double").alias("score"),
+            F.lit(0).alias("rank"))
     dim = len(centers[0])
     indexed = assign_lists(corpus, centers, id_col, vec_col)
 

@@ -365,8 +365,7 @@ _SQL_FUZZY_COMP = f"""
 #: (Spark applicationId, sf_dir, threshold); the cached frame is
 #: materialized (localCheckpoint / durable checkpoint), so reuse costs a
 #: block read, not a recomputation. Bounded memory: one row per doc that
-#: appears in a near-dup pair. Set SPARK_GRAFT_NO_STAGE_CACHE=1 to
-#: disable (per-query timing honesty — e.g. the crossover probes).
+#: appears in a near-dup pair.
 _FUZZY_CC_CACHE: dict[tuple, DataFrame] = {}
 
 #: Build-cost attribution (VERDICT r11 next-round #5): with the stage
@@ -395,8 +394,6 @@ def fuzzy_cc_labels(spark: SparkSession, sf_dir: str,
     makes the cross-query cache sound: the three consumers' oracles each
     replay the identical ``_SQL_FUZZY_COMP`` WITH-chain independently, so
     a stale/wrong cache entry fails three hash checks at once."""
-    import os as _os
-
     from hierarchical_graph_db_spark.materialize import materialize
     from hierarchical_graph_db_spark.operators.graph import (
         connected_components,
@@ -421,8 +418,7 @@ def fuzzy_cc_labels(spark: SparkSession, sf_dir: str,
              F.col("component").cast("long").alias("keep_id"))
     cc = cc.transform(materialize)
     _FUZZY_CC_BUILD_SECS[key] = round(_time.time() - _t0, 3)
-    if not _os.environ.get("SPARK_GRAFT_NO_STAGE_CACHE"):
-        _FUZZY_CC_CACHE[key] = cc
+    _FUZZY_CC_CACHE[key] = cc
     return cc
 
 
@@ -621,7 +617,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_ngram_jaccard``, no df-cutoff enters the score. Two lossless
     strategies, auto-picked per corpus from the shingle df distribution
     (operators/dedup_fuzzy.py:_auto_prefix_plan; crossover measured in
-    PLANS.md §Round-11 / tools/prefix_crossover_probe.py):
+    PLANS.md §Round-11 / CROSSOVER_r11.json):
 
     * PPJoin prefix filtering (Chaudhuri et al. 2006, Xiao et al. 2008):
       each document indexes only its |s| − ⌈0.5·|s|⌉ + 1 globally RAREST

@@ -8,9 +8,9 @@ exactly those N rows, i.e. the same call with ``train_sample=None`` on the
 top-N frame — the same discipline as the graph hybrid finishes'
 ``small_cutoff=0`` differentials.
 
-Covers fixture data and an adversarial random corpus (negative
-components, near-tie distances, a sample smaller than / equal to / larger
-than the corpus).
+Covers fixture data, an empty corpus and an adversarial random corpus
+(negative components, near-tie distances, a sample smaller than / equal
+to / larger than the corpus).
 """
 
 from __future__ import annotations
@@ -73,17 +73,20 @@ def test_kmeans_twin_random(spark, n, train_sample, k, n_rounds):
     assert _bits_rows(twin) == _bits_rows(dist)
 
 
-@pytest.mark.parametrize("m,ksub,n_rounds,oversample", [
-    (4, 8, 2, 4),
-    (2, 4, 3, 8),
-])
-def test_pq_twin_random(spark, m, ksub, n_rounds, oversample):
-    df = _random_corpus(spark, 300, 16, seed=m * 100 + ksub)
+@pytest.mark.parametrize("m,ksub,n_rounds,oversample,n", [
+    (4, 8, 2, 4, 300),
+    (2, 4, 3, 8, 300),
+    (4, 8, 2, 4, 0),     # empty corpus: no shard gets seeds on either path
+], ids=["4-8-2-4", "2-4-3-8", "empty"])
+def test_pq_twin_random(spark, m, ksub, n_rounds, oversample, n):
+    df = _random_corpus(spark, n, 16, seed=m * 100 + ksub)
     kw = dict(dim=16, m=m, ksub=ksub, n_rounds=n_rounds,
               oversample=oversample)
     twin = pq_codebooks(df, train_sample=128, **kw)
     dist = pq_codebooks(_top_n(df, 128), train_sample=None, **kw)
     assert _bits_books(twin) == _bits_books(dist)
+    if n == 0:
+        assert twin == [[]] * m
 
 
 def test_kmeans_twin_fixture(spark, sf_dir):

@@ -87,29 +87,6 @@ def test_cluster_mode_actually_multi_jvm_and_durable(sweeps):
     assert cluster["checkpoint_dir"] is not None  # checkpoint() branch
 
 
-def test_multiexec_r13_artifact_from_consolidated_tool():
-    """VERDICT r12 #6 gate: the round-13 multi-exec artifact was produced
-    by the one parameterized tool (`multi_executor_sweep.py --equivalence`)
-    and proves hash identity across local[*] and local-cluster cells for
-    the two r12 registry additions — including `thread_reply_layers`'
-    distributed dag_layers relaxation under separate executor JVMs — plus
-    graph_pagerank for cross-round continuity."""
-    path = os.path.join(REPO, "MULTIEXEC_r13.json")
-    with open(path) as f:
-        doc = json.load(f)
-    assert doc["identical"] is True
-    assert doc["mismatches"] == {}
-    assert set(doc["queries"]) == {"graph_pagerank", "thread_reply_layers",
-                                   "dedup_containment_autocap"}
-    masters = {c["master"] for c in doc["cells"].values()}
-    assert any(m.startswith("local[") for m in masters)
-    assert any(m.startswith("local-cluster") for m in masters)
-    # every local-cluster cell exercised the durable checkpoint() branch
-    for c in doc["cells"].values():
-        if c["master"].startswith("local-cluster"):
-            assert c["checkpoint_dir"] is not None
-
-
 @pytest.mark.parametrize("name", QUERIES)
 def test_hash_identical_across_execution_modes(sweeps, name):
     local, cluster = sweeps

@@ -89,6 +89,22 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert mean_recall >= 0.9, f"mean recall {mean_recall:.2f}, per-q {recalls}"
 
 
+def test_ivf_empty_corpus_returns_empty_frame(spark):
+    """An empty corpus trains no centroids; the search returns 0 rows with
+    the schema the search over a trained index has."""
+    from hierarchical_graph_db_spark.operators.ivf import (
+        deterministic_centroids,
+        ivf_topk,
+    )
+
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    centers = deterministic_centroids(df, n_lists=8)
+    assert centers == []
+    out = ivf_topk(df, df, centers, k=K, nprobe=2)
+    assert out.schema == ivf_topk(df, df, [[0.0] * DIM], k=K).schema
+    assert out.count() == 0
+
+
 def test_banded_near_dup_recall_vs_exact(spark):
     """Default (banded-LSH) near_duplicate_pairs vs the exact=True oracle on
     clustered vectors: high recall, identical scores for every found pair."""

@@ -8,8 +8,7 @@ from hierarchical_graph_db_spark.queries import dedup as dq
 SF = "/root/testdata/sf0.001"
 
 
-def test_fuzzy_cc_build_is_attributed_and_cached(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_NO_STAGE_CACHE", raising=False)
+def test_fuzzy_cc_build_is_attributed_and_cached(spark):
     dq._FUZZY_CC_CACHE.clear()
     dq._FUZZY_CC_BUILD_SECS.clear()
 
@@ -24,14 +23,3 @@ def test_fuzzy_cc_build_is_attributed_and_cached(spark, monkeypatch):
     assert second is first
     assert dq.stage_cache_build_secs() == attr
 
-
-def test_fuzzy_cc_no_cache_env_rebuilds(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_STAGE_CACHE", "1")
-    dq._FUZZY_CC_CACHE.clear()
-    dq._FUZZY_CC_BUILD_SECS.clear()
-    a = dq.fuzzy_cc_labels(spark, SF, threshold=0.5)
-    b = dq.fuzzy_cc_labels(spark, SF, threshold=0.5)
-    assert a is not b
-    assert not dq._FUZZY_CC_CACHE
-    # timing honesty: the build cost is still recorded (last build wins)
-    assert dq.stage_cache_build_secs()

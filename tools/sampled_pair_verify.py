@@ -251,15 +251,11 @@ def main() -> None:
 
     from hierarchical_graph_db_spark.session import get_spark
 
-    import bench
-
     spark = get_spark("sampled_pair_verify")
     spark.sparkContext.setLogLevel("ERROR")
     results = [verify_query(spark, args.fixture_dir, q, args.sample)
                for q in args.queries.split(",")]
-    doc = {"fixture": args.fixture_dir,
-           "results": results,
-           "calibration_at_end": bench._calibrate()}
+    doc = {"fixture": args.fixture_dir, "results": results}
     text = json.dumps(doc, indent=1)
     if args.out:
         with open(args.out, "w") as f:

@@ -13,7 +13,7 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 ``--sample N --seed R`` mirrors the driver's per-round random draw (VERDICT r6
 next-round item 7): a reproducible random subset so each round's local log can
 record a fresh 50 in addition to the full sweep. ``--timings-out`` writes
-per-query wall seconds as JSON, used to build the sf0.1 -> sf1 scaling table.
+per-query wall seconds as JSON, with the shared-stage and sink attributions.
 """
 
 from __future__ import annotations
@@ -62,13 +62,6 @@ from result_digest import canon_value, frame_digest  # noqa: E402  (shared canon
 def main() -> int:
     from hierarchical_graph_db_spark.session import get_spark
     import __spark_entry__ as entry_mod
-
-    # Host-health gate (VERDICT r11 #1): timing artifacts only. Pure
-    # correctness sweeps don't need it — a slow host can't flip a hash.
-    health = None
-    if _ARGS.timings_out:
-        from host_health import gate_for_artifact
-        health = gate_for_artifact(f"verify_local {SF_DIR}")
 
     spark = get_spark("verify-local")
     con = duckdb.connect()
@@ -162,14 +155,6 @@ def main() -> int:
         else:
             print(f"PASS  {name} ({len(s_rows)} rows, {took:.1f}s)")
     if _ARGS.timings_out:
-        # Self-document host speed: this box is a shared VM whose effective
-        # CPU speed moves ±20-40% between back-to-back runs with zero local
-        # load (round-9 variance probe: two identical solo bench runs, 135.6
-        # vs 195.0 s). A timing artifact without a host fingerprint cannot
-        # be compared across rounds; record the bench.py calibration probe
-        # at sweep END (start-of-sweep speed is already stale by then).
-        from bench import (_calibrate, host_factor, host_factor_parallel,
-                           normalize_timings)
         # Shared-stage build attribution (VERDICT r11 #5): whichever of
         # the three fuzzy-CC consumers ran first paid the shared build —
         # record it so per-query walls read correctly across rounds.
@@ -182,31 +167,13 @@ def main() -> int:
         from hierarchical_graph_db_spark.streaming.ingest import (
             sink_batch_attribution,
         )
-        cal_end = _calibrate()
-        # Calibration-normalized fallback series (VERDICT r13 #1): raw
-        # walls are the record on a healthy host; normalized walls
-        # (wall / (mean single-thread calibration / 0.19 floor)) make the
-        # series comparable across degraded rounds. CPU-bound only —
-        # I/O-heavy queries normalize worse (see bench.normalize_timings).
-        factor = host_factor(
-            (health or {}).get("calibration", {}).get("single_thread_sec"),
-            cal_end["single_thread_sec"])
-        factor_par = host_factor_parallel(
-            (health or {}).get("calibration", {}).get("parallel_wall_sec"),
-            cal_end["parallel_wall_sec"])
         with open(_ARGS.timings_out, "w") as f:
             json.dump({"sf_dir": SF_DIR, "timings": timings,
                        "failures": failures,
-                       "health_at_start": health,
-                       "host_factor": factor,
-                       "host_factor_parallel": factor_par,
-                       "normalized_timings":
-                           normalize_timings(timings, factor),
                        "stage_cache_attribution": stage_cache_build_secs(),
                        "cdc_sink_attribution": sink_batch_attribution("cdc"),
                        "dedup_sink_attribution":
-                           sink_batch_attribution("dedup"),
-                       "calibration_at_end": cal_end},
+                           sink_batch_attribution("dedup")},
                       f, indent=1, sort_keys=True)
     print(f"\n{len(failures)} failures of "
           f"{len([n for n in qs if not selected or n in selected])}")
