@@ -12,16 +12,33 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitions for the *local* test harness. On a real cluster this is
-# a floor only: AQE coalesces small partitions and splits skewed ones at
-# runtime, so we set the initial number high there (e.g. 2000+ for 100 TB
-# inputs) and let adaptive execution shrink it per-stage.
-_LOCAL_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 _LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+
+
+def positive_int_env(name: str, default: int) -> int:
+    """The environment variable ``name`` as a positive integer (``default``
+    when unset); any other value raises ValueError naming the variable."""
+    raw = os.environ.get(name, str(default))
+    if not (raw.isascii() and raw.isdigit()) or int(raw) < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
+def default_driver_mem(phys_bytes: int | None = None) -> str:
+    """The local driver heap: 16g, or three quarters of the host's physical
+    RAM where that is less, so the one JVM never claims the whole host."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, phys_bytes * 3 // 4 // 2 ** 20)}m"
 
 
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply the engine's Spark conf to any builder (local or cluster)."""
+    # Shuffle partitions for the *local* test harness. On a real cluster
+    # this is a floor only: AQE coalesces small partitions and splits skewed
+    # ones at runtime, so we set the initial number high there (e.g. 2000+
+    # for 100 TB inputs) and let adaptive execution shrink it per-stage.
+    shuffle_partitions = positive_int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32)
     # Executor-side Python workers must be able to import this package.
     # local[N] inherits the driver's sys.path for free (same process tree);
     # multi-JVM masters (local-cluster, standalone, YARN) spawn workers with
@@ -46,7 +63,7 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         # Broadcast threshold: dims (region/nation/customer at small SF) are
         # broadcast; AQE upgrades joins when runtime size < threshold too.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.shuffle.partitions", str(_LOCAL_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Parquet: keep predicate pushdown + dictionary filtering on
         # (defaults, pinned here because the engine depends on them).
         # zstd output (guide §6): smaller than snappy at similar read
@@ -96,12 +113,13 @@ def get_spark(app_name: str = "hierarchical-graph-db-spark") -> SparkSession:
         # local[N] runs driver and all N executor threads in ONE JVM whose
         # default heap is spark.driver.memory=1g — fine at the unit-test
         # scale factors, but an sf1 (6M-row lineitem) sweep OOMs it. Size
-        # the single JVM like the N executors it stands in for; only
-        # honored when this process launches the JVM (first session). On a
-        # real cluster the submit config owns memory and this is skipped.
+        # the single JVM like the N executors it stands in for, within the
+        # host's RAM; only honored when this process launches the JVM
+        # (first session). On a real cluster the submit config owns memory
+        # and this is skipped.
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem()))
         # List files on the driver, never as a Spark job (see docstring):
         # a bucketed-store read of 64 version dirs ran a 64-task listing
         # job (0.23-0.32 s on 4 cores) before its scan. Explicit masters

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hierarchical_graph_db_spark.streaming.ingest import apply_batch
 from hierarchical_graph_db_spark.streaming.store import BucketedParquetStore
 
 
@@ -49,33 +50,23 @@ class ContinuousRollupSink:
         self.minutes = minutes
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if self.store.already_done(batch_id):
-            return  # replayed batch: already merged, skip (exactly-once)
-        batch.persist()
-        try:
-            partial = partial_rollup(batch, self.minutes).withColumn(
-                "bucket_id", F.unix_timestamp("window_start")
-            )
-            # O(#touched windows) driver rows — bucket ids only.
-            touched = [r[0] for r in partial.select("bucket_id").distinct().collect()]
-            if not touched:
-                self.store.mark_committed(batch_id)
-                return
-            if self.store.exists():
-                current = self.store.read(buckets=touched)
+        def merge(rows: DataFrame, stored: DataFrame | None) -> DataFrame:
+            merged = partial_rollup(rows, self.minutes)
+            if stored is not None:
                 merged = (
-                    current.unionByName(partial)
-                    .groupBy("window_start", "event_type", "bucket_id")
+                    stored.unionByName(merged)
+                    .groupBy("window_start", "event_type")
                     .agg(
                         F.sum("n_events").alias("n_events"),
                         F.sum("sum_value").alias("sum_value"),
                     )
                 )
-            else:
-                merged = partial
-            self.store.commit(batch_id, merged, write_partitions=len(touched))
-        finally:
-            batch.unpersist()
+            return merged.withColumn(
+                "bucket_id", F.unix_timestamp("window_start"))
+
+        window_start = F.window(F.col("ts"), f"{self.minutes} minutes")["start"]
+        apply_batch(self.store, batch_id, batch,
+                    F.unix_timestamp(window_start), merge, "rollup")
 
 
 def read_rollup(spark: SparkSession, store_path: str) -> DataFrame:

@@ -115,16 +115,19 @@ class BucketedParquetStore:
             return {"batch_id": -1, "buckets": {}}
         return m
 
-    def _schema(self, manifest: dict) -> StructType | None:
-        """The store schema pinned at commit time (bucket column included),
-        or None for a pre-schema manifest. Pinning it makes ``read()``
-        independent of ambient session config — without it the bucket
-        column's dtype comes back through partition-directory *inference*,
-        so a session with ``partitionColumnTypeInference.enabled=false``
-        would silently read int buckets as strings."""
+    def _schema(self, manifest: dict) -> StructType:
+        """The store schema pinned at commit time (bucket column included).
+        Pinning it makes ``read()`` independent of ambient session config —
+        without it the bucket column's dtype comes back through
+        partition-directory *inference*, so a session with
+        ``partitionColumnTypeInference.enabled=false`` would silently read
+        int buckets as strings. Every commit pins it, so only a store that
+        never committed data lacks one."""
         raw = manifest.get("schema")
         if raw is None:
-            return None
+            raise ValueError(
+                f"store at {self.path} has no pinned schema: no batch has "
+                "committed data — check exists() before read()")
         return StructType.fromJson(json.loads(raw))
 
     def committed_batch_id(self) -> int:
@@ -183,55 +186,36 @@ class BucketedParquetStore:
             # seen (a micro-batch whose keys all hash to new buckets).
             # spark.read.parquet() with zero paths would raise
             # UNABLE_TO_INFER_SCHEMA; the contract is an empty frame with
-            # the store schema, same as the pre-manifest isin-filter read.
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-            live = manifest["buckets"]
-            if live:  # pre-schema manifest: borrow the schema of any live dir
-                e, v = next(iter(sorted(live.items())))
-                return (
-                    self.spark.read.option("basePath", self.data_dir)
-                    .parquet(self._version_dir(e, v))
-                    .drop("__v").limit(0)
-                )
-            raise ValueError(
-                f"store at {self.path} is empty and has no pinned schema — "
-                "check exists() before read()")
-        if schema is not None:
-            # The manifest pins the schema, so hand it to the reader and
-            # skip footer merging entirely — mergeSchema costs one footer
-            # read per live bucket version at PLANNING time (a measurable
-            # ~1 s per probe at 64 buckets, per-batch on the sink path).
-            # Old buckets missing later-pinned columns null-fill natively
-            # under an explicit schema, exactly as the footer-merged read
-            # did; the conform-select below still owns order and types.
-            reader = self.spark.read.schema(schema)
-        else:
-            # Pre-schema manifest: footer-merge to surface the union.
-            reader = self.spark.read.option("mergeSchema", "true")
-        df = reader.option("basePath", self.data_dir).parquet(*paths)
-        # __v materializes as a partition column under basePath — internal.
-        df = df.drop("__v")
-        if schema is not None:
-            # Conform to the committed schema (column order included): the
-            # bucket column's read-back type no longer depends on whether
-            # the ambient session enables partition-type inference. Cast
-            # only real type drift — a nullability-only difference in nested
-            # types is a Spark cast error and needs no cast at all.
-            current = {f.name: f.dataType for f in df.schema.fields}
-            cols = []
-            for f in schema.fields:
-                if f.name not in current:
-                    # Schema evolution: a later commit pinned a column that
-                    # older untouched buckets' files lack — null-fill (the
-                    # standard wide-schema read) instead of a raw KeyError.
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                elif current[f.name].simpleString() == f.dataType.simpleString():
-                    cols.append(F.col(f.name))
-                else:
-                    cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            df = df.select(*cols)
-        return df
+            # the store schema.
+            return self.spark.createDataFrame([], schema)
+        # The manifest pins the schema, so the reader gets it and reads no
+        # footers at planning time (footer merging cost ~1 s per probe at
+        # 64 buckets). Old buckets missing later-pinned columns null-fill
+        # natively under an explicit schema; __v materializes as a
+        # partition column under basePath — internal.
+        df = (
+            self.spark.read.schema(schema)
+            .option("basePath", self.data_dir).parquet(*paths)
+            .drop("__v")
+        )
+        # Conform to the committed schema (column order included): the
+        # bucket column's read-back type no longer depends on whether
+        # the ambient session enables partition-type inference. Cast
+        # only real type drift — a nullability-only difference in nested
+        # types is a Spark cast error and needs no cast at all.
+        current = {f.name: f.dataType for f in df.schema.fields}
+        cols = []
+        for f in schema.fields:
+            if f.name not in current:
+                # Schema evolution: a later commit pinned a column that
+                # older untouched buckets' files lack — null-fill (the
+                # standard wide-schema read) instead of a raw KeyError.
+                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+            elif current[f.name].simpleString() == f.dataType.simpleString():
+                cols.append(F.col(f.name))
+            else:
+                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        return df.select(*cols)
 
     # -- write-ahead commit --------------------------------------------------
     def already_done(self, batch_id: int) -> bool:
@@ -247,29 +231,25 @@ class BucketedParquetStore:
         if (pending is not None and int(pending.get("batch_id", -1)) == batch_id
                 and pending.get("entries") is not None
                 and os.path.exists(os.path.join(self._scratch(batch_id), "_SUCCESS"))):
-            self._publish(batch_id, pending["entries"],
-                          schema_json=pending.get("schema"),
-                          emptied=pending.get("emptied"))
+            self._publish(batch_id, pending["entries"], pending.get("schema"),
+                          pending.get("emptied") or [])
             return True
         return False
 
     def commit(self, batch_id: int, merged_touched: DataFrame,
-               emptied: list[str] | None = None,
                all_touched: list | None = None, *,
                write_partitions: int) -> list[str]:
         """Durably replace the touched buckets with ``merged_touched``
         (which must contain ``bucket_col`` and the full post-merge contents
-        of every bucket it mentions). ``emptied`` names bucket ids whose
-        post-merge contents are ZERO rows (a CDC delete can wipe a bucket;
-        absence from the data alone cannot express that) — they are
-        removed from the live manifest at the same atomic swap.
+        of every bucket it mentions).
 
-        ``all_touched`` (bucket ids) is the cheaper way to express the same
-        thing: the scratch listing the commit performs anyway IS the set of
-        non-empty post-merge buckets, so emptied = all_touched minus the
-        written dirs — no caller-side ``merged.select(bucket).distinct().
-        collect()`` pass over the merge plan (that probe cost one extra
-        materialization of the whole merge per micro-batch).
+        ``all_touched`` (bucket ids) names every bucket the merge covered.
+        Those whose post-merge contents are ZERO rows (a CDC delete can
+        wipe a bucket; absence from the data alone cannot express that)
+        are removed from the live manifest at the same atomic swap. The
+        scratch listing the commit performs anyway IS the set of non-empty
+        post-merge buckets, so the emptied ones are ``all_touched`` minus
+        the written dirs — no caller-side pass over the merge plan.
         ``write_partitions`` is the number of buckets the batch may touch
         (an upper bound is fine); the write runs at most that many tasks.
         Returns the written bucket dir names."""
@@ -298,20 +278,13 @@ class BucketedParquetStore:
         # The schema travels through pending.json into the manifest so a
         # crash-replay publish pins it identically to a clean commit.
         schema_json = merged_touched.schema.json()
-        emptied_entries = [f"{prefix}{b}" for b in (emptied or [])]
-        if all_touched is not None:
-            written = set(entries)
-            emptied_entries += [
-                f"{prefix}{b}" for b in all_touched
-                if f"{prefix}{b}" not in written
-                and f"{prefix}{b}" not in emptied_entries
-            ]
+        emptied = sorted(
+            {f"{prefix}{b}" for b in all_touched or []} - set(entries))
         self._write_json("pending.json", {"batch_id": batch_id,
                                           "entries": entries,
-                                          "emptied": emptied_entries,
+                                          "emptied": emptied,
                                           "schema": schema_json})
-        self._publish(batch_id, entries, schema_json=schema_json,
-                      emptied=emptied_entries)
+        self._publish(batch_id, entries, schema_json, emptied)
         return entries
 
     def mark_committed(self, batch_id: int) -> None:
@@ -322,8 +295,7 @@ class BucketedParquetStore:
         self._write_json("manifest.json", manifest)
 
     def _publish(self, batch_id: int, entries: list[str],
-                 schema_json: str | None = None,
-                 emptied: list[str] | None = None) -> None:
+                 schema_json: str | None, emptied: list[str]) -> None:
         """Publish scratch → data: move each touched bucket's rows into a
         NEW immutable version dir, then swap the manifest once.
 
@@ -345,7 +317,7 @@ class BucketedParquetStore:
         manifest["batch_id"] = batch_id
         for entry in entries:
             manifest["buckets"][entry] = batch_id
-        for entry in emptied or []:
+        for entry in emptied:
             # the bucket's last version stays on disk for as_of snapshots
             # (vacuum bounds it); only the LIVE pointer disappears
             manifest["buckets"].pop(entry, None)

@@ -161,15 +161,15 @@ def test_cdc_sink_records_batch_attribution(spark, tmp_path):
     replays/empty batches record nothing — so the sidecar's row count is
     exactly the applied-batch count."""
     from hierarchical_graph_db_spark.streaming.ingest import (
-        cdc_sink_attribution,
+        sink_batch_attribution,
     )
 
-    before = len(cdc_sink_attribution())
+    before = len(sink_batch_attribution("cdc"))
     sink = _sink(spark, tmp_path)
     sink(spark.createDataFrame([(1, 1, "I", "a", 10)], CDC_SCHEMA), 0)
     sink(spark.createDataFrame([(1, 2, "U", "a", 11)], CDC_SCHEMA), 1)
     sink(spark.createDataFrame([(1, 9, "U", "z", 99)], CDC_SCHEMA), 0)  # replay
-    rows = cdc_sink_attribution()[before:]
+    rows = sink_batch_attribution("cdc")[before:]
     assert [r["batch_id"] for r in rows] == [0, 1]
     for r in rows:
         assert r["sink"] == "cdc"
@@ -181,8 +181,8 @@ def test_cdc_sink_records_batch_attribution(spark, tmp_path):
         assert r["touched_buckets"] >= 1
         assert abs(r["probe_secs"] + r["commit_secs"] - r["total_secs"]) < 0.01
     # the accessor returns a copy — mutating it must not corrupt the record
-    cdc_sink_attribution().clear()
-    assert len(cdc_sink_attribution()) >= before + 2
+    sink_batch_attribution("cdc").clear()
+    assert len(sink_batch_attribution("cdc")) >= before + 2
 
 
 def test_dedup_sink_records_batch_attribution(spark, tmp_path):

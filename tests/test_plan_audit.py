@@ -8,9 +8,10 @@ builders (Catalog, joins, the fuzzy-dedup candidate paths) fails fast."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.plan_audit import audit  # noqa: E402
 

@@ -7,6 +7,8 @@ gate) at sf0.01; this suite just guarantees nothing in the registry is broken
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hierarchical_graph_db_spark.queries import load
@@ -40,7 +42,8 @@ def test_coverage_header_matches_registry():
 
     import __spark_entry__ as e
 
-    with open("/root/repo/COVERAGE.md") as f:
+    with open(os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "COVERAGE.md")) as f:
         head = f.read(600)
     m = re.search(r"\*\*(\d+)\s*\nqueries, (\d+) with DuckDB oracles\*\*",
                   head) or re.search(

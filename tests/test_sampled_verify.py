@@ -11,12 +11,14 @@ match the engine's shingle contract exactly.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import Row
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 SF_DIR = "/root/testdata/sf0.01"
 

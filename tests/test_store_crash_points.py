@@ -67,7 +67,7 @@ def test_commit_replays_identically_from_every_replace_crash(
 
     monkeypatch.setattr(store_mod.os, "replace", counting)
     store_mod.BucketedParquetStore(spark, clean).commit(
-        1, _batch1(spark), emptied=[2], write_partitions=3)
+        1, _batch1(spark), all_touched=[0, 1, 2], write_partitions=3)
     monkeypatch.setattr(store_mod.os, "replace", real_replace)
     n_mutations = count["n"]
     # pending swap + 2 dir moves + archive swap + manifest swap
@@ -92,7 +92,7 @@ def test_commit_replays_identically_from_every_replace_crash(
         monkeypatch.setattr(store_mod.os, "replace", crashing)
         with pytest.raises(RuntimeError, match="crash at replace"):
             store_mod.BucketedParquetStore(spark, path).commit(
-                1, _batch1(spark), emptied=[2], write_partitions=3)
+                1, _batch1(spark), all_touched=[0, 1, 2], write_partitions=3)
         monkeypatch.setattr(store_mod.os, "replace", real_replace)
 
         # crashes before the live-manifest swap leave batch 0 fully
@@ -106,7 +106,7 @@ def test_commit_replays_identically_from_every_replace_crash(
         # standard recovery: finish the publish if the WAL is replayable,
         # else redo the whole (idempotent) commit
         if not fresh.already_done(1):
-            fresh.commit(1, _batch1(spark), emptied=[2], write_partitions=3)
+            fresh.commit(1, _batch1(spark), all_touched=[0, 1, 2], write_partitions=3)
         assert _final_state(spark, path) == want, f"crash point {k}"
         # replay of the replay is a no-op skip
         assert fresh.already_done(1)

@@ -4,6 +4,7 @@ foreachBatch dedup sink has exactly-once effects across replays."""
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 from pyspark.sql import Row
 
@@ -209,15 +210,25 @@ def test_dedup_sink_restart_merges_existing_store(spark, tmp_path):
 
 def test_dedup_sink_never_collects_store(spark, tmp_path):
     """The scale contract: no driver-side materialization of store state.
-    Source inspection — the sink and its store must contain no collect()
-    over store data (the only collects are distinct bucket-id lists)."""
+    Source inspection — the sinks' shared skeleton and the store must
+    contain no collect() over store data (the only collect is the distinct
+    bucket-id list), and no sink collects anything of its own."""
     import inspect
 
     from hierarchical_graph_db_spark.streaming import store as store_mod
+    from hierarchical_graph_db_spark.streaming.continuous_aggregate import (
+        ContinuousRollupSink,
+    )
+    from hierarchical_graph_db_spark.streaming.ingest import (
+        CdcParquetSink,
+        apply_batch,
+    )
 
-    sink_src = inspect.getsource(DedupParquetSink)
-    assert sink_src.count(".collect()") == 1           # bucket-id list only
-    assert "createDataFrame" not in sink_src
+    skeleton_src = inspect.getsource(apply_batch)
+    assert skeleton_src.count(".collect()") == 1       # bucket-id list only
+    assert "createDataFrame" not in skeleton_src
+    for sink_cls in (DedupParquetSink, CdcParquetSink, ContinuousRollupSink):
+        assert ".collect()" not in inspect.getsource(sink_cls)
     store_src = inspect.getsource(store_mod)
     assert ".collect()" not in store_src
     # the only createDataFrame is the zero-row empty-schema frame for reads
@@ -824,8 +835,8 @@ def test_store_emptied_bucket_crash_between_moves_and_swap(spark, tmp_path,
     with pytest.raises(RuntimeError, match="killed"):
         # bucket 0 rewritten, bucket 1 deleted down to zero rows
         store.commit(1, spark.createDataFrame(
-            [(0, "a2")], "bucket_id int, val string"), emptied=[1],
-                write_partitions=2)
+            [(0, "a2")], "bucket_id int, val string"),
+            all_touched=[0, 1], write_partitions=2)
     monkeypatch.setattr(BucketedParquetStore, "_write_json", orig)
 
     fresh = BucketedParquetStore(spark, path)
@@ -920,9 +931,61 @@ def test_dedup_store_fixed_spark_work_per_call(spark, tmp_path):
     assert write_tasks <= sc.defaultParallelism, write_tasks
 
 
-def test_stream_state_partitions_env_is_validated(spark, monkeypatch):
-    import pytest
+def _call_jobs(sc, sink, batch, batch_id):
+    """Ids of the Spark jobs one ``sink(batch, batch_id)`` call runs."""
+    group = f"sink-call-{uuid.uuid4().hex[:8]}"
+    try:
+        sc.setJobGroup(group, "one sink call")
+        sink(batch, batch_id)
+        return _group_jobs(sc, group)
+    finally:
+        sc._jsc.clearJobGroup()
 
+
+def test_sink_fixed_spark_jobs_per_call(spark, tmp_path):
+    """Per-call job counts of the three bucketed-store sinks at the suite's
+    4 shuffle partitions: a fresh-store call, a call against an existing
+    store, and (dedup) a true replay, which runs no job at all."""
+    from hierarchical_graph_db_spark.streaming.continuous_aggregate import (
+        ContinuousRollupSink,
+    )
+    from hierarchical_graph_db_spark.streaming.ingest import CdcParquetSink
+
+    sc = spark.sparkContext
+    dedup = DedupParquetSink(spark, str(tmp_path / "dedup"), key="key",
+                             order_by=["src"], member_cols=["src"])
+    mails = lambda lo, hi, src: spark.createDataFrame(  # noqa: E731
+        [Row(key=f"k{i}", payload=f"p{i}", src=src) for i in range(lo, hi)])
+    first = mails(0, 200, "a")
+    assert len(_call_jobs(sc, dedup, first, 0)) <= 4
+    assert len(_call_jobs(sc, dedup, mails(100, 300, "b"), 1)) <= 7
+    assert _call_jobs(sc, dedup, first, 0) == []
+
+    cdc = CdcParquetSink(spark, str(tmp_path / "cdc"), keys=["k"])
+    changes = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k bigint, seq int, op string, grp string, m bigint")
+    assert len(_call_jobs(sc, cdc, changes(
+        [(k, 1, "I", "a", k) for k in range(50)]), 0)) <= 5
+    assert len(_call_jobs(sc, cdc, changes(
+        [(k, 2, "U" if k % 2 else "D", "b", k) for k in range(25, 75)]),
+        1)) <= 7
+
+    rollup = ContinuousRollupSink(spark, str(tmp_path / "rollup"))
+    events = lambda hours: spark.createDataFrame(  # noqa: E731
+        [Row(event_id=i, ts=dt.datetime(2024, 1, 1, h, 5), user_id=1,
+             event_type="click", value=1.0, props="{}")
+         for i, h in enumerate(hours)], FIXTURES["events"])
+    assert len(_call_jobs(sc, rollup, events([9, 10]), 0)) <= 4
+    assert len(_call_jobs(sc, rollup, events([10, 11]), 1)) <= 7
+
+
+def test_stream_state_partitions_env_is_validated(spark, monkeypatch):
+    """Both partition-count variables go through one positive-integer
+    reader: a bad value raises naming the variable, and changes nothing."""
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from hierarchical_graph_db_spark.session import configure
     from hierarchical_graph_db_spark.streaming.ingest import (
         _stream_shuffle_partitions,
     )
@@ -935,6 +998,17 @@ def test_stream_state_partitions_env_is_validated(spark, monkeypatch):
             with _stream_shuffle_partitions(spark):
                 pass
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", bad)
+        builder = SparkSession.Builder()
+        with pytest.raises(ValueError,
+                           match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+            configure(builder)
+        assert builder._options == {}
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "3")
+    options = configure(SparkSession.Builder())._options
+    assert options["spark.sql.shuffle.partitions"] == "3"
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
     with _stream_shuffle_partitions(spark):

@@ -16,13 +16,15 @@ eviction.
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
 N_CHUNKS = 6

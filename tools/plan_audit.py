@@ -26,9 +26,10 @@ pinned subset; run standalone for the full registry:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: Queries that legitimately carry a BroadcastNestedLoopJoin, with the
 #: reason. Exactly the strict-audit hit list (run with --strict to

@@ -241,6 +241,7 @@ def probe_dedup_sink(spark: SparkSession, landing: str, workdir: str,
     every batch exercises the merge path, not just appends)."""
     from hierarchical_graph_db_spark.streaming.ingest import (
         DedupParquetSink,
+        _hash_bucket,
         read_dedup_store,
         run_available_now,
     )
@@ -258,7 +259,7 @@ def probe_dedup_sink(spark: SparkSession, landing: str, workdir: str,
             sink.store.vacuum(keep_last=keep_last)
         rec = {"batch": batch_id, "input_rows": n_in,
                "touched_buckets": batch.select(
-                   sink._bucket_of(F.col("dk")).alias("b"))
+                   _hash_bucket(n_buckets, F.col("dk")).alias("b"))
                .distinct().count(),
                "store_rows": read_dedup_store(spark, store_path).count()}
         rec.update(_dir_stats(sink.store))
